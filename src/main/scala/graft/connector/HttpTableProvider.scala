@@ -1,35 +1,41 @@
 package graft.connector
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.GraftError.{ConfigError, EmptyResultError}
 import graft.config.{Pagination, Source}
 import graft.http.HttpFetcher
 import java.util.{Map => JMap}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.{InternalRow, StructFilters}
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.util.{FailureSafeParser, PermissiveMode}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import scala.jdk.CollectionConverters._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for HTTP JSON tables: `spark.read.format("http")`.
   *
-  * This is the idiomatic end-state for the reference's HTTP scan
-  * (/root/reference/src/datasources.rs:318-391): the provider fetches the
-  * snapshot eagerly on the driver (same snapshot semantics as
-  * `HttpTables` / reference dataframe.rs:14-21), infers an all-rows
-  * superset schema, and serves scans whose DECODE IS PROJECTION-AWARE —
-  * `SupportsPushDownRequiredColumns` hands the scan the pruned schema and
-  * the partition readers parse ONLY those fields out of each JSON row
-  * (the reference's `project_values` decodes only projected columns —
-  * execution.rs:60-76). `SELECT a FROM t` never materializes column b.
+  * The idiomatic end-state for the reference's HTTP scan
+  * (datasources.rs:318-391): the provider fetches the snapshot eagerly on
+  * the driver (same snapshot semantics as `HttpTables` / reference
+  * dataframe.rs:14-21), infers an all-rows superset schema with
+  * `spark.read.json`, and serves scans that decode with Spark's own JSON
+  * reader ([[HttpTableProvider.decode]]).
+  *
+  * Two things are pushed into the scan, and nothing else:
+  *  - columns: the reader converts only the projected fields of each row
+  *    (the reference's `project_values`, execution.rs:60-76);
+  *  - filters: those over top-level columns are applied inside Spark's
+  *    JSON parser, which drops a row as soon as the fields they read are
+  *    parsed. Every filter is also returned as residual.
+  * Limit, top-N and aggregates are left to Catalyst above the scan.
   *
   * Options: `url` (required), `method` (GET|POST, default GET),
   * `paginate` (=true enables the pagination loop), `start_page`,
@@ -37,19 +43,13 @@ import scala.jdk.CollectionConverters._
   * defaults as the YAML config / reference model.rs:48-59), and
   * `fetch` (`driver` | `executor`, default `driver`).
   *
-  * `fetch=executor` (requires pagination) moves the page fetching OFF
+  * `fetch=executor` (requires pagination) moves the page fetching off
   * the driver: the driver requests only the first page (schema
-  * inference), and the scan plans the `start_page..end_page` range as
-  * contiguous page-range [[InputPartition]]s that each EXECUTOR fetches
-  * and decodes itself. At 1000-executor scale the driver never
-  * materializes the snapshot — ingestion bandwidth is the cluster's,
-  * not one machine's. Pushed filters ride along and prune rows at
-  * executor decode time (same advisory-safe residual contract as the
-  * driver path). Trade-offs vs the default snapshot path, documented:
-  * schema comes from page 1 only (the reference's own first-record
-  * semantics, datasources.rs:195-196), and the empty-page termination
-  * rule becomes per-range (a bounded `end_page` is the contract here —
-  * the config-driven intent of reference datasources.rs:286-316).
+  * inference), and the scan plans `start_page..end_page` as contiguous
+  * page-range partitions that each executor fetches and decodes itself.
+  * Trade-offs vs the snapshot: schema comes from page 1 only (the
+  * reference's own first-record semantics, datasources.rs:195-196), and
+  * the empty-page termination rule becomes per-range.
   *
   * `HttpTables.register` remains the simple path (decode-all + cache);
   * this connector is the scan-integrated path.
@@ -79,9 +79,8 @@ final class HttpTableProvider extends TableProvider with DataSourceRegister {
     val rows =
       if (HttpTableProvider.executorFetch(options)) {
         // distributed mode: the driver touches ONLY the first page — just
-        // enough to infer a schema (the reference's own first-record
-        // semantics, datasources.rs:195-196). Everything else is fetched
-        // by executors at scan time.
+        // enough to infer a schema. Everything else is fetched by
+        // executors at scan time.
         val src = HttpTableProvider.toSource(options)
         val p = src.pagination.getOrElse(throw ConfigError(
           "fetch=executor requires pagination options (paginate=true / start_page / end_page)"))
@@ -100,13 +99,9 @@ final class HttpTableProvider extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
     val o = new CaseInsensitiveStringMap(properties)
-    if (HttpTableProvider.executorFetch(o)) {
-      val src = HttpTableProvider.toSource(o)
-      new HttpDistributedTable(src.name, schema, src)
-    } else {
-      val (src, rows) = snapshot(o)
-      new HttpTable(src.name, schema, rows.toArray, src)
-    }
+    val src = HttpTableProvider.toSource(o)
+    val rows = if (HttpTableProvider.executorFetch(o)) None else Some(snapshot(o)._2.toArray)
+    new HttpTable(src.name, schema, rows, src)
   }
 }
 
@@ -134,430 +129,175 @@ object HttpTableProvider {
         pageParam = Option(o.get("page_param")).getOrElse(d.pageParam),
         pageSizeParam = Option(o.get("page_size_param")).getOrElse(d.pageSizeParam))))
   }
+
+  /** The options `spark.read.json(Dataset[String])` builds, and so the
+    * ones [[HttpTableProvider.inferSchema]] inferred the schema with.
+    * Read from the active session's conf, so call it on the driver. */
+  private[connector] def jsonOptions(): JSONOptions = {
+    val conf = SQLConf.get
+    new JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone,
+      conf.columnNameOfCorruptRecord)
+  }
+
+  /** The connector's one decode path: JSON lines → rows of `required`,
+    * through Spark's own JSON reader, set up as Spark's JSON file source
+    * sets it up. Only the fields in `required` are converted; a value
+    * that does not convert to its column's type reads as null
+    * (PERMISSIVE); `filters` go to Spark's `JsonFilters`, which skip a
+    * row inside the parser. */
+  private[connector] def decode(lines: Iterator[String], required: StructType,
+                                options: JSONOptions,
+                                filters: Seq[sources.Filter]): Iterator[InternalRow] = {
+    val corrupt = options.columnNameOfCorruptRecord
+    val parser = new JacksonParser(StructType(required.filterNot(_.name == corrupt)),
+      options, allowArrayAsStructs = true, filters)
+    val safe = new FailureSafeParser[String](
+      line => parser.parse(line, CreateJacksonParser.string, UTF8String.fromString),
+      PermissiveMode, required, corrupt)
+    lines.flatMap(safe.parse)
+  }
 }
 
-/** Fetched snapshot as a readable table — batch over the snapshot, or a
-  * MICRO-BATCH stream that consumes one page per trigger (the
-  * reference's pagination loop re-expressed as an incremental source:
-  * offsets ARE page numbers, so restart/recovery replays exactly the
-  * uncommitted pages). */
+/** An HTTP table: the driver-fetched snapshot, or (`fetch=executor`) only
+  * the page range. The snapshot can also be read as a MICRO-BATCH stream
+  * that consumes one page per trigger (offsets ARE page numbers, so
+  * restart/recovery replays exactly the uncommitted pages). */
 final class HttpTable(tableName: String, tableSchema: StructType,
-                      rows: Array[String], src: Source)
+                      snapshot: Option[Array[String]], src: Source)
     extends Table with SupportsRead {
   override def name(): String = tableName
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new HttpScanBuilder(tableSchema, rows, src)
+    if (snapshot.isEmpty) java.util.EnumSet.of(TableCapability.BATCH_READ)
+    else java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    new HttpScanBuilder(tableSchema, snapshot, src)
 }
 
-/** Scan builder accepting Catalyst's column-pruning, filter, and limit
-  * pushdown. Filters and limit prune the driver-held snapshot BEFORE
-  * rows are shipped to executors and decoded — a strict improvement on
-  * the reference, which pushes nothing (datasources.rs:385-388).
-  *
-  * Safety: every filter is also returned as a residual (Spark re-applies
-  * it post-scan), so the driver-side JSON predicate can afford to be
-  * best-effort — an un-evaluatable node simply keeps the row. Limit is
-  * reported as not-fully-pushed for the same reason. */
-final class HttpScanBuilder(full: StructType, rows: Array[String],
+/** Column pruning and filter pushdown. Filters over top-level columns
+  * are handed to the JSON parser (as Spark's own JSON source does); all
+  * of them are also returned as residual, so Spark re-checks them. */
+final class HttpScanBuilder(full: StructType, snapshot: Option[Array[String]],
                             src: Source)
     extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit
-    with SupportsPushDownTopN
-    with SupportsPushDownAggregates {
-  import org.apache.spark.sql.connector.expressions.aggregate.{
-    Aggregation, Count, CountStar, Max, Min}
-  import org.apache.spark.sql.connector.expressions.{
-    Expression => V2Expression, NamedReference, SortDirection, SortOrder}
-
+    with SupportsPushDownFilters {
   private var required: StructType = full
   private var pushed: Array[sources.Filter] = Array.empty
-  private var limit: Int = -1
-  private var topN: Int = -1
-  private var topKey: Option[(String, Boolean)] = None // (column, ascending)
-  private var aggResult: Option[(String, StructType)] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    pushed = filters.filter(JsonPredicate.supported)
-    filters // all residual: Spark re-checks, so pruning is advisory-safe
+    pushed = StructFilters.pushedFilters(filters, full)
+    filters
   }
   override def pushedFilters(): Array[sources.Filter] = pushed
 
-  override def pushLimit(n: Int): Boolean = { limit = n; false }
-
-  // --- top-N pushdown (PARTIAL): ORDER BY col LIMIT n ships only the n
-  // best snapshot rows to executors instead of the whole table. Spark
-  // re-sorts and re-limits above the scan (isPartiallyPushed), so the
-  // driver-side sort only has to guarantee a SUPERSET-of-top-n, which
-  // it does by declining anything whose ordering could diverge from
-  // Spark's: multi-key sorts, nested/array keys, and — because a
-  // missing or null key's rank depends on the null ordering — any
-  // snapshot where the key is absent, null, or not value-convertible
-  // on even one row. Comparators mirror Spark exactly where accepted
-  // (Long/Boolean natural, java.lang.Double.compare for NaN/-0.0,
-  // UTF8String binary order for strings).
-  override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
-    if (orders.length != 1 || n <= 0) return false
-    val o = orders.head
-    soleField(o.expression()) match {
-      case Some(col) =>
-        val typeOk = full(col).dataType match {
-          case LongType | DoubleType | StringType | BooleanType => true
-          case _ => false
-        }
-        if (!typeOk) return false
-        val mapper = new ObjectMapper()
-        val keyTotal = rows.forall { line =>
-          val node = try mapper.readTree(line) catch { case _: Exception => null }
-          node != null && node.isObject && {
-            val v = node.get(col)
-            v != null && !v.isNull && (full(col).dataType match {
-              case LongType => v.canConvertToLong
-              case DoubleType => v.isNumber
-              case BooleanType => v.isBoolean
-              case _ => true
-            })
-          }
-        }
-        if (!keyTotal) return false
-        topKey = Some((col, o.direction() == SortDirection.ASCENDING))
-        topN = n
-        true
-      case None => false
-    }
-  }
-  override def isPartiallyPushed(): Boolean = true
-
-  /** The n best rows under the accepted single-key ordering (only
-    * reached when [[pushTopN]] proved the key total and convertible). */
-  private def applyTopN(lines: Array[String], mapper: ObjectMapper): Array[String] =
-    topKey match {
-      case Some((col, asc)) if topN >= 0 && topN < lines.length =>
-        def node(line: String): JsonNode = mapper.readTree(line).get(col)
-        val sorted = full(col).dataType match {
-          case LongType =>
-            lines.map(l => (node(l).asLong, l)).sortBy(_._1).map(_._2)
-          case DoubleType =>
-            lines.map(l => (node(l).asDouble, l))
-              .sortWith((a, b) => java.lang.Double.compare(a._1, b._1) < 0)
-              .map(_._2)
-          case BooleanType =>
-            lines.map(l => (node(l).asBoolean, l)).sortBy(_._1).map(_._2)
-          case _ =>
-            lines.map { l =>
-              val v = node(l)
-              (UTF8String.fromString(if (v.isTextual) v.asText else v.toString), l)
-            }.sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
-        }
-        (if (asc) sorted else sorted.reverse).take(topN)
-      case _ => lines
-    }
-
-  // --- aggregate pushdown (COMPLETE): global COUNT(*)/COUNT(col)/MIN/MAX
-  // are answered from the driver-held snapshot without shipping a single
-  // data row to executors — "SELECT count(*) FROM api_table" becomes a
-  // 1-row scan. Complete (not partial) pushdown is only claimed when
-  // every aggregate is computable exactly here; grouped or unsupported
-  // aggregations fall back to the normal scan untouched. Because this
-  // builder reports every filter as residual, Spark only routes an
-  // aggregate here when no Filter sits between it and the scan — the
-  // unfiltered-rollup fast path, exact by construction.
-
-  private def soleField(e: V2Expression): Option[String] = e match {
-    case nr: NamedReference if nr.fieldNames.length == 1 =>
-      val n = nr.fieldNames.head
-      if (full.fieldNames.contains(n)) Some(n) else None
-    case _ => None
-  }
-
-  /** Supported plan: per aggregate, (kind, column). Min/max only on the
-    * scalar types whose JSON round-trip is value-exact. */
-  private def aggPlanOf(agg: Aggregation): Option[Seq[(String, String)]] = {
-    if (agg.groupByExpressions.nonEmpty) return None
-    def minMaxOk(n: String): Boolean = full(n).dataType match {
-      case LongType | DoubleType | StringType | BooleanType => true
-      case _ => false
-    }
-    val specs: Seq[Option[(String, String)]] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(("count_star", ""))
-      case c: Count if !c.isDistinct => soleField(c.column).map(("count", _))
-      case m: Min => soleField(m.column).filter(minMaxOk).map(("min", _))
-      case m: Max => soleField(m.column).filter(minMaxOk).map(("max", _))
-      case _ => None
-    }
-    if (specs.nonEmpty && specs.forall(_.isDefined)) Some(specs.map(_.get))
-    else None
-  }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    aggPlanOf(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean = aggPlanOf(agg) match {
-    case None => false
-    case Some(specs) =>
-      val mapper = new ObjectMapper()
-      val nodes = prunedLines(mapper).map { line =>
-        try mapper.readTree(line) catch { case _: Exception => null }
-      }.filter(n => n != null && n.isObject)
-      def valuesOf(col: String): Array[JsonNode] = nodes
-        .map(_.get(col))
-        .filter(v => v != null && !v.isNull)
-        .filter(v => full(col).dataType match { // reader-convert validity
-          case LongType => v.canConvertToLong
-          case DoubleType => v.isNumber
-          case BooleanType => v.isBoolean
-          case _ => true // strings coerce via text/toString, never null
-        })
-      val out = mapper.createObjectNode()
-      val fields = specs.zipWithIndex.map { case ((kind, col), i) =>
-        val name = s"agg_$i"
-        kind match {
-          case "count_star" =>
-            out.put(name, nodes.length.toLong)
-            StructField(name, LongType, nullable = false)
-          case "count" =>
-            out.put(name, valuesOf(col).length.toLong)
-            StructField(name, LongType, nullable = false)
-          case mm =>
-            val dt = full(col).dataType
-            val vs = valuesOf(col)
-            val sign = if (mm == "min") -1 else 1
-            if (vs.isEmpty) out.putNull(name)
-            else dt match {
-              case LongType =>
-                out.put(name, vs.map(_.asLong)
-                  .reduce((a, b) => if (java.lang.Long.compare(a, b) * sign >= 0) a else b))
-              case DoubleType =>
-                out.put(name, vs.map(_.asDouble)
-                  .reduce((a, b) => if (java.lang.Double.compare(a, b) * sign >= 0) a else b))
-              case BooleanType =>
-                out.put(name, vs.map(_.asBoolean)
-                  .reduce((a, b) => if (java.lang.Boolean.compare(a, b) * sign >= 0) a else b))
-              case _ => // StringType: UTF8String binary order = Spark's
-                out.put(name, vs
-                  .map(v => if (v.isTextual) v.asText else v.toString)
-                  .map(UTF8String.fromString)
-                  .reduce((a, b) => if (a.compareTo(b) * sign >= 0) a else b)
-                  .toString)
-            }
-            StructField(name, dt, nullable = true)
-        }
-      }
-      aggResult = Some((mapper.writeValueAsString(out), StructType(fields)))
-      true
-  }
-
-  private def prunedLines(mapper: ObjectMapper): Array[String] = {
-    val afterFilters =
-      if (pushed.isEmpty) rows
-      else rows.filter { line =>
-        val node = try mapper.readTree(line) catch { case _: Exception => null }
-        pushed.forall(f => JsonPredicate.matches(node, f))
-      }
-    val afterTopN = applyTopN(afterFilters, mapper)
-    if (limit >= 0 && limit < afterTopN.length) afterTopN.take(limit)
-    else afterTopN
-  }
-
-  override def build(): Scan = aggResult match {
-    case Some((line, schema)) => new HttpScan(Array(line), schema, full.length, src)
-    case None =>
-      new HttpScan(prunedLines(new ObjectMapper()), required, full.length, src)
-  }
+  override def build(): Scan =
+    new HttpScan(snapshot, required, full.length, src, pushed.toSeq)
 }
 
-/** Best-effort evaluation of Catalyst source filters against a JsonNode.
-  * `matches` must NEVER wrongly return false for a row the real
-  * predicate accepts (filters are re-applied post-scan, so returning
-  * true on uncertainty is always safe). */
-private[connector] object JsonPredicate {
-  import sources._
-
-  def supported(f: Filter): Boolean = f match {
-    case EqualTo(_, _) | GreaterThan(_, _) | GreaterThanOrEqual(_, _) |
-         LessThan(_, _) | LessThanOrEqual(_, _) | IsNull(_) | IsNotNull(_) |
-         In(_, _) | StringStartsWith(_, _) | StringEndsWith(_, _) |
-         StringContains(_, _) => true
-    case And(l, r) => supported(l) && supported(r)
-    case Or(l, r) => supported(l) && supported(r)
-    case _ => false // Not/EqualNullSafe/unknown: leave to post-scan
-  }
-
-  def matches(root: JsonNode, f: Filter): Boolean = {
-    if (root == null) return true // unparseable here → let the scan decide
-    f match {
-      case And(l, r) => matches(root, l) && matches(root, r)
-      case Or(l, r) => matches(root, l) || matches(root, r)
-      case IsNull(a) => field(root, a).forall(_.isNull)
-      case IsNotNull(a) => field(root, a).exists(!_.isNull)
-      case EqualTo(a, v) => cmp(root, a, v).forall(_ == 0)
-      case GreaterThan(a, v) => cmp(root, a, v).forall(_ > 0)
-      case GreaterThanOrEqual(a, v) => cmp(root, a, v).forall(_ >= 0)
-      case LessThan(a, v) => cmp(root, a, v).forall(_ < 0)
-      case LessThanOrEqual(a, v) => cmp(root, a, v).forall(_ <= 0)
-      case In(a, vs) => field(root, a) match {
-        // per-value: incomparable (None) counts as a possible match —
-        // keep-on-uncertainty, the post-scan Filter decides
-        case Some(n) if !n.isNull => vs.exists(v => compare(n, v).forall(_ == 0))
-        case _ => true
-      }
-      case StringStartsWith(a, p) => str(root, a).forall(_.startsWith(p))
-      case StringEndsWith(a, p) => str(root, a).forall(_.endsWith(p))
-      case StringContains(a, p) => str(root, a).forall(_.contains(p))
-      case _ => true
-    }
-  }
-
-  /** Resolve a (possibly dotted) attribute; None = can't resolve here.
-    * A field whose NAME contains a dot arrives backtick-quoted — try the
-    * whole (unquoted) name before splitting on dots. */
-  private def field(root: JsonNode, attr: String): Option[JsonNode] = {
-    if (root == null || !root.isObject) return None
-    val unquoted = attr.replace("`", "")
-    val whole = root.get(unquoted)
-    if (whole != null) return Some(whole)
-    var n: JsonNode = root
-    for (part <- unquoted.split('.')) {
-      if (n == null || !n.isObject) return None
-      n = n.get(part)
-    }
-    Option(n)
-  }
-
-  private def str(root: JsonNode, attr: String): Option[String] =
-    field(root, attr).collect { case n if n.isTextual => n.asText }
-
-  /** Some(sign) when comparable; None = keep the row. */
-  private def cmp(root: JsonNode, attr: String, v: Any): Option[Int] =
-    field(root, attr).flatMap(n => compare(n, v))
-
-  private def compare(n: JsonNode, v: Any): Option[Int] = (n, v) match {
-    case (x, _) if x.isNull => None
-    case (x, s: String) if x.isTextual => Some(x.asText.compareTo(s))
-    case (x, b: java.lang.Boolean) if x.isBoolean =>
-      Some(java.lang.Boolean.compare(x.asBoolean, b))
-    case (x, num: Number) if x.isNumber =>
-      Some(java.lang.Double.compare(x.asDouble, num.doubleValue))
-    case _ => None // type mismatch: post-scan decides
-  }
-}
-
-/** Scan over the driver-held snapshot: rows are sliced across
-  * defaultParallelism input partitions (the reference pins one partition —
-  * execution.rs:95 — this is the strictly-better distributed layout), and
-  * each reader decodes only the pruned columns.
+/** Scan over the driver-held snapshot or, with `fetch=executor`, over
+  * the configured page range. Either is cut into at most
+  * defaultParallelism contiguous input partitions (the reference pins
+  * one partition — execution.rs:95): snapshot slices carry their rows,
+  * page ranges only (source config, first page, last page).
   *
-  * Reports statistics ([[SupportsReportStatistics]]) from the snapshot
-  * it already holds: exact row count, size ≈ pruned-fraction of the
-  * JSON text bytes. Catalyst's join planning consumes these — a small
-  * HTTP dim joined to a big fact gets broadcast because the scan SAYS
-  * it is small, instead of falling back to the conservative default
-  * (sort-merge both sides). The reference's plan reports no stats at
-  * all (`PlanProperties` carries none — execution.rs:88-98). */
-final class HttpScan(rows: Array[String], required: StructType,
-                     fullFieldCount: Int, src: Source)
+  * The snapshot reports statistics ([[SupportsReportStatistics]]): exact
+  * row count, size ≈ pruned fraction of the JSON text bytes. Catalyst's
+  * join planning consumes these — a small HTTP dim joined to a big fact
+  * is broadcast because the scan SAYS it is small. A page range has no
+  * rows to count and reports none. */
+final class HttpScan(snapshot: Option[Array[String]], required: StructType,
+                     fullFieldCount: Int, src: Source,
+                     val pushedFilters: Seq[sources.Filter])
     extends Scan with Batch with SupportsReportStatistics {
+  private val p = src.pagination.getOrElse(Pagination())
+
   override def readSchema(): StructType = required
-  override def description(): String =
-    s"HttpScan(rows=${rows.length}, readSchema=${required.catalogString})"
+  override def description(): String = {
+    val what = snapshot.fold(s"pages=${p.startPage}..${p.endPage}")(rows => s"rows=${rows.length}")
+    s"HttpScan($what, readSchema=${required.catalogString}, " +
+      s"pushedFilters=${pushedFilters.mkString("[", ", ", "]")})"
+  }
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new HttpMicroBatchStream(src, required)
 
   override def estimateStatistics(): Statistics = new Statistics {
-    private val textBytes = rows.iterator.map(_.length.toLong).sum
+    private def known(v: Array[String] => Long) =
+      snapshot.fold(java.util.OptionalLong.empty())(rows => java.util.OptionalLong.of(v(rows)))
     // pruned columns never materialize — scale the text size by the
     // projected fraction (floor 1 field so the estimate never hits 0)
     private val frac =
       math.max(1, required.length).toDouble / math.max(1, fullFieldCount)
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(math.max(1L, (textBytes * frac).toLong))
-    override def numRows(): java.util.OptionalLong =
-      java.util.OptionalLong.of(rows.length.toLong)
+      known(rows => math.max(1L, (rows.iterator.map(_.length.toLong).sum * frac).toLong))
+    override def numRows(): java.util.OptionalLong = known(_.length.toLong)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    if (rows.isEmpty) return Array.empty // pushed filters can prune all rows
-    val slices = math.max(1, math.min(rows.length,
-      SparkSession.active.sparkContext.defaultParallelism))
-    val per = (rows.length + slices - 1) / slices
-    rows.grouped(per).map(HttpInputPartition(_): InputPartition).toArray
+    // group size that cuts `count` items into ≤ defaultParallelism groups
+    val parallelism = SparkSession.active.sparkContext.defaultParallelism
+    def per(count: Int): Int = math.max(1, (count + parallelism - 1) / parallelism)
+    snapshot match {
+      case Some(rows) =>
+        rows.grouped(per(rows.length)).map(HttpInputPartition(_): InputPartition).toArray
+      case None =>
+        val pages = p.startPage to p.endPage
+        pages.grouped(per(pages.length))
+          .map(r => HttpPageRangePartition(src, r.head, r.last): InputPartition).toArray
+    }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new HttpReaderFactory(required)
+    new HttpReaderFactory(required, HttpTableProvider.jsonOptions(), pushedFilters)
 }
 
+/** Snapshot slice or stream page: the JSON rows themselves. */
 final case class HttpInputPartition(rows: Array[String]) extends InputPartition
 
-final class HttpReaderFactory(required: StructType)
+/** `fetch=executor` page range: metadata only, a few hundred bytes. */
+final case class HttpPageRangePartition(src: Source, fromPage: Int,
+                                        toPage: Int) extends InputPartition {
+  /** The range's rows, fetched page by page on the executor. An empty
+    * page ends THIS range — within a contiguous range that matches the
+    * sequential loop's termination; ranges past a feed's end fetch their
+    * first page, see it empty, and finish. */
+  def lines(): Iterator[String] = {
+    val fetcher = new HttpFetcher()
+    val p = src.pagination.getOrElse(Pagination())
+    (fromPage to toPage).iterator
+      .map(fetcher.fetchPage(src.url, src.method, p, _))
+      .takeWhile(_.nonEmpty)
+      .flatten
+  }
+}
+
+/** The one reader factory of the snapshot, `fetch=executor` and stream
+  * scans: every partition's lines go through [[HttpTableProvider.decode]]. */
+final class HttpReaderFactory(required: StructType, options: JSONOptions,
+                              filters: Seq[sources.Filter])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new HttpPartitionReader(partition.asInstanceOf[HttpInputPartition].rows, required)
-}
-
-/** Projection-aware JSON-line decoder: for each row, only the fields in
-  * `required` are converted (missing / mismatched → null, PERMISSIVE-style).
-  */
-final class HttpPartitionReader(rows: Array[String], required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val mapper = new ObjectMapper()
-  private var i = 0
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (i >= rows.length) false
-    else {
-      current = JsonDecode.toRow(mapper.readTree(rows(i)), required)
-      i += 1
-      true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val lines = partition match {
+      case HttpInputPartition(rows) => rows.iterator
+      case range: HttpPageRangePartition => range.lines()
     }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Minimal JsonNode → Catalyst converter for the connector's inferred
-  * type surface (string / long / double / boolean / struct / array —
-  * what Spark JSON inference emits with default options). */
-private[connector] object JsonDecode {
-  def toRow(node: JsonNode, schema: StructType): InternalRow =
-    if (node == null || !node.isObject) new GenericInternalRow(schema.length)
-    else new GenericInternalRow(
-      schema.fields.map(f => convert(node.get(f.name), f.dataType)))
-
-  def convert(node: JsonNode, dt: DataType): Any =
-    if (node == null || node.isNull) null
-    else dt match {
-      case StringType =>
-        UTF8String.fromString(if (node.isTextual) node.asText else node.toString)
-      case LongType => if (node.canConvertToLong) node.asLong else null
-      case DoubleType => if (node.isNumber) node.asDouble else null
-      case BooleanType => if (node.isBoolean) node.asBoolean else null
-      case st: StructType => if (node.isObject) toRow(node, st) else null
-      case ArrayType(et, _) =>
-        if (!node.isArray) null
-        else new GenericArrayData(node.elements().asScala.map(convert(_, et)).toArray)
-      case dt: DecimalType => // inference emits decimal(20,0) for > Long.Max ints
-        if (!node.isNumber && !node.isTextual) null
-        else try org.apache.spark.sql.types.Decimal(
-          new java.math.BigDecimal(node.asText), dt.precision, dt.scale)
-        catch { case _: Exception => null }
-      case _ => null // types outside the inferred surface
+    val rows = HttpTableProvider.decode(lines, required, options, filters)
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean = rows.hasNext && { current = rows.next(); true }
+      override def get(): InternalRow = current
+      override def close(): Unit = ()
     }
+  }
 }
 
 /** Streaming offset = the last fully-consumed PAGE NUMBER. Committing a
   * batch therefore commits whole pages — on restart the checkpoint
   * replays exactly the uncommitted pages, nothing finer-grained to
   * reconcile. */
-final case class HttpPageOffset(page: Int)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
+final case class HttpPageOffset(page: Int) extends Offset {
   override def json(): String = s"""{"page":$page}"""
 }
 
@@ -576,18 +316,19 @@ final case class HttpPageOffset(page: Int)
   *
   * Driver-side page cache: `latestOffset` must fetch to know whether a
   * page exists, and `planInputPartitions` must hand the same rows out —
-  * the cache makes that one fetch per page. After recovery the cache is
-  * cold and uncommitted pages are re-fetched (offsets are page numbers,
-  * so recovery is well-defined against any endpoint that serves stable
-  * pages — the same assumption the reference's loop makes).
+  * the cache makes that one fetch per page. `commit` drops the committed
+  * pages, so the cache holds only pages not yet committed. After
+  * recovery the cache is cold and uncommitted pages are re-fetched
+  * (offsets are page numbers, so recovery is well-defined against any
+  * endpoint that serves stable pages — the same assumption the
+  * reference's loop makes).
   */
 final class HttpMicroBatchStream(src: Source, required: StructType)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+    extends MicroBatchStream {
 
-  private val p = src.pagination.getOrElse(graft.config.Pagination())
+  private val p = src.pagination.getOrElse(Pagination())
   @transient private lazy val fetcher = new HttpFetcher()
-  @transient private lazy val cache =
+  @transient private[connector] lazy val cache =
     scala.collection.mutable.Map.empty[Int, Array[String]]
 
   private def pageRows(page: Int): Array[String] = cache.synchronized {
@@ -620,135 +361,14 @@ final class HttpMicroBatchStream(src: Source, required: StructType)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new HttpReaderFactory(required)
+    new HttpReaderFactory(required, HttpTableProvider.jsonOptions(), Nil)
 
   override def deserializeOffset(json: String): Offset =
     HttpPageOffset(new ObjectMapper().readTree(json).get("page").asInt)
 
-  override def commit(end: Offset): Unit = ()
+  override def commit(end: Offset): Unit = {
+    val done = end.asInstanceOf[HttpPageOffset].page
+    cache.synchronized(cache.filterInPlace((page, _) => page > done))
+  }
   override def stop(): Unit = ()
-}
-
-/** `fetch=executor` table: no driver-held snapshot — the scan plans the
-  * configured page range across executors. This is the 100×-HTTP-scale
-  * shape: with the default snapshot path, one driver fetches (and holds)
-  * every page before the first task runs; here the driver holds only
-  * option strings and each executor pulls its own contiguous page range
-  * in parallel, so ingestion bandwidth scales with the cluster. */
-final class HttpDistributedTable(tableName: String, tableSchema: StructType,
-                                 src: Source)
-    extends Table with SupportsRead {
-  override def name(): String = tableName
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new HttpDistributedScanBuilder(tableSchema, src)
-}
-
-/** Column pruning and filter pushdown for the distributed path. There is
-  * no snapshot to prune on the driver — pushed filters are SHIPPED with
-  * each page-range partition and applied at executor decode time, before
-  * any InternalRow materializes (all filters stay residual, so the
-  * executor-side check keeps the same keep-on-uncertainty contract as
-  * [[JsonPredicate]] everywhere else). Limit is not pushed: a global
-  * limit over unordered distributed pages is Spark's to enforce. */
-final class HttpDistributedScanBuilder(full: StructType, src: Source)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = full
-  private var pushed: Array[sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    pushed = filters.filter(JsonPredicate.supported)
-    filters
-  }
-  override def pushedFilters(): Array[sources.Filter] = pushed
-  override def build(): Scan = new HttpDistributedScan(required, src, pushed)
-}
-
-/** Plans `start_page..end_page` as ≤ defaultParallelism contiguous
-  * page-range partitions. Each partition is (source config, page range,
-  * pushed filters) — pure metadata, a few hundred bytes, regardless of
-  * data volume. */
-final class HttpDistributedScan(required: StructType, src: Source,
-                                filters: Array[sources.Filter])
-    extends Scan with Batch {
-  private val p = src.pagination.getOrElse(Pagination())
-
-  override def readSchema(): StructType = required
-  override def description(): String =
-    s"HttpDistributedScan(pages=${p.startPage}..${p.endPage}, " +
-      s"readSchema=${required.catalogString})"
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val pages = p.endPage - p.startPage + 1
-    if (pages <= 0) return Array.empty
-    val slices = math.max(1, math.min(pages,
-      SparkSession.active.sparkContext.defaultParallelism))
-    val per = (pages + slices - 1) / slices
-    (p.startPage to p.endPage).grouped(per)
-      .map(r => HttpPageRangePartition(src, r.head, r.last): InputPartition)
-      .toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new HttpDistributedReaderFactory(required, filters)
-}
-
-final case class HttpPageRangePartition(src: Source, fromPage: Int,
-                                        toPage: Int) extends InputPartition
-
-final class HttpDistributedReaderFactory(required: StructType,
-                                         filters: Array[sources.Filter])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val pr = partition.asInstanceOf[HttpPageRangePartition]
-    new HttpPageRangeReader(pr, required, filters)
-  }
-}
-
-/** Executor-side reader: fetches each page in its range, filters the
-  * parsed JSON against the pushed predicates (keep-on-uncertainty), and
-  * decodes only the pruned columns. An empty/null page ends THIS range —
-  * within a contiguous range that matches the sequential loop's
-  * termination; ranges past a feed's true end simply fetch their first
-  * page, see it empty, and finish (bounded by `end_page` either way). */
-final class HttpPageRangeReader(part: HttpPageRangePartition,
-                                required: StructType,
-                                filters: Array[sources.Filter])
-    extends PartitionReader[InternalRow] {
-  private val fetcher = new HttpFetcher()
-  private val mapper = new ObjectMapper()
-  private val p = part.src.pagination.getOrElse(Pagination())
-  private var page = part.fromPage
-  private var exhausted = false
-  private var buf: Iterator[JsonNode] = Iterator.empty
-  private var current: InternalRow = _
-
-  private def advancePage(): Unit =
-    while (!buf.hasNext && !exhausted) {
-      if (page > part.toPage) exhausted = true
-      else {
-        val rows = fetcher.fetchPage(part.src.url, part.src.method, p, page)
-        page += 1
-        if (rows.isEmpty) exhausted = true // empty page ends the range
-        else buf = rows.iterator
-          .map(line => try mapper.readTree(line) catch { case _: Exception => null })
-          .filter(n => filters.forall(f => JsonPredicate.matches(n, f)))
-      }
-    }
-
-  override def next(): Boolean = {
-    advancePage()
-    if (!buf.hasNext) false
-    else {
-      current = JsonDecode.toRow(buf.next(), required)
-      true
-    }
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }

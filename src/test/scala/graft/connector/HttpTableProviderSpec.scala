@@ -28,6 +28,18 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
       case b: BatchScanExec => b.scan.asInstanceOf[HttpScan]
     }.getOrElse(fail("no BatchScanExec in plan"))
 
+  /** Rows the scan's readers emit: pushed filters drop rows inside the
+    * JSON parser, before Spark's residual Filter sees them. */
+  private def decodedRows(scan: HttpScan): Int = {
+    val factory = scan.createReaderFactory()
+    scan.planInputPartitions().map { part =>
+      val reader = factory.createReader(part)
+      var n = 0
+      while (reader.next()) n += 1
+      n
+    }.sum
+  }
+
   test("format(\"http\") resolves by short name, infers schema, reads values") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
@@ -54,7 +66,7 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("aggregate pushdown: global count/min/max answered by a 1-row scan, no HashAggregate") {
+  test("global count/min/max are Catalyst's aggregate over the connector scan") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
         .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"),
@@ -62,11 +74,7 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
           org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("score")).as("mn"),
           org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("name")).as("mx"))
       val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("HashAggregate"),
-        s"aggregate was not completely pushed:\n$plan")
-      val scan = scanOf(df)
-      assert(scan.description().contains("rows=1"),
-        s"pushed-aggregate scan should hold exactly one row: ${scan.description()}")
+      assert(plan.contains("Aggregate(key=[]"), s"aggregates stay above the scan:\n$plan")
       val r = df.collect().head
       assert(r.getAs[Long]("n") == 3L)
       assert(r.getAs[Long]("ns") == 3L)
@@ -126,9 +134,11 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
         .filter("active = true AND score > 8.0")
       val scan = scanOf(df)
-      // only ann (score 9.5, active) survives the driver-side prune
-      assert(scan.planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 1)
+      import org.apache.spark.sql.sources.{EqualTo, GreaterThan}
+      assert(Seq(EqualTo("active", true), GreaterThan("score", 8.0))
+        .forall(scan.pushedFilters.contains), s"pushed: ${scan.pushedFilters}")
+      // only ann (score 9.5, active) leaves the JSON parser
+      assert(decodedRows(scan) == 1)
       val rows = df.select("name").collect().map(_.getString(0)).toSeq
       assert(rows == Seq("ann"))
     }
@@ -138,15 +148,14 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       def load() = spark.read.format("http").option("url", srv.url("/users")).load()
       val starts = load().filter("name LIKE 'b%'")
-      assert(scanOf(starts).planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 1)
+      assert(decodedRows(scanOf(starts)) == 1)
       assert(starts.select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
       val in = load().filter("id IN (1, 3)").select("id")
+      assert(decodedRows(scanOf(in)) == 2)
       assert(in.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
-      // arithmetic predicate: not pushable — full snapshot ships, Spark filters
+      // arithmetic predicate: not pushable — every row decodes, Spark filters
       val arith = load().filter("id + 1 = 3")
-      assert(scanOf(arith).planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 3)
+      assert(decodedRows(scanOf(arith)) == 3)
       assert(arith.select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
     }
   }
@@ -172,30 +181,22 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("limit pushdown truncates the snapshot") {
+  test("limit is Spark's: applied above the connector scan") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
         .limit(2)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b.scan.asInstanceOf[HttpScan]
-      }
-      scan.foreach(s => assert(s.planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum <= 2))
+      assert(df.collect().length == 2)
       assert(df.count() == 2)
     }
   }
 
-  test("top-N pushdown ships only the n best rows; Spark re-sorts above the scan") {
+  test("ORDER BY ... LIMIT n is Spark's top-N above the connector scan") {
     StubServer.withServer({ case ("GET", "/users", _) => (200, users) }) { srv =>
       import org.apache.spark.sql.functions.col
       val df = spark.read.format("http").option("url", srv.url("/users")).load()
         .orderBy(col("score").desc).limit(2)
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b.scan.asInstanceOf[HttpScan]
-      }.getOrElse(fail("no BatchScanExec in plan"))
-      assert(scan.planInputPartitions()
-        .map(_.asInstanceOf[HttpInputPartition].rows.length).sum == 2,
-        "top-2 scan should hold exactly two snapshot rows")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("TakeOrderedAndProject"), s"top-N stays above the scan:\n$plan")
       assert(df.collect().map(_.getAs[String]("name")).toSeq == Seq("ann", "cyd"))
     }
   }
@@ -322,8 +323,6 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  // ---- fetch=executor: distributed page-range scan ----
-
   /** Stub serving `nPages` pages of 2 rows each; records which pages were hit. */
   private def pagedRoutes(nPages: Int,
                           hits: java.util.concurrent.ConcurrentHashMap[Int, Int])
@@ -338,6 +337,27 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
         (200, s"""[{"id":$a,"pg":$page},{"id":${a + 1},"pg":$page}]""")
       } else (200, "[]")
   }
+
+  test("micro-batch commit evicts committed pages; the next probe does not refetch them") {
+    val hits = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    StubServer.withServer(pagedRoutes(2, hits)) { srv =>
+      val src = HttpTableProvider.toSource(new CaseInsensitiveStringMap(Map(
+        "url" -> srv.url("/docs"), "start_page" -> "1", "end_page" -> "10").asJava))
+      val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, pg BIGINT")
+      val stream = new HttpMicroBatchStream(src, schema)
+      val end = stream.latestOffset()
+      assert(end == HttpPageOffset(2))
+      assert(stream.planInputPartitions(stream.initialOffset(), end).length == 2)
+      assert(stream.cache.keySet == Set(1, 2))
+      stream.commit(end)
+      assert(stream.cache.isEmpty, "committed pages must leave the driver")
+      assert(stream.latestOffset() == end)
+      assert(hits.get(1) == 1 && hits.get(2) == 1,
+        s"committed pages must not be fetched again: $hits")
+    }
+  }
+
+  // ---- fetch=executor: distributed page-range scan ----
 
   test("fetch=executor reads every page without a driver snapshot") {
     val hits = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
@@ -364,12 +384,9 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
         .option("fetch", "executor")
         .option("start_page", "1").option("end_page", "4")
         .load()
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b.scan.asInstanceOf[HttpDistributedScan]
-      }.getOrElse(fail("no HttpDistributedScan in plan"))
-      val parts = scan.planInputPartitions()
+      val parts = scanOf(df).planInputPartitions()
         .map(_.asInstanceOf[HttpPageRangePartition])
-      assert(parts.length > 1, "4 pages on local[32] must split into >1 range")
+      assert(parts.length > 1, "4 pages must split into >1 range")
       // contiguous, non-overlapping cover of 1..4
       val covered = parts.flatMap(p => p.fromPage to p.toPage).sorted
       assert(covered.toSeq == Seq(1, 2, 3, 4))
@@ -387,12 +404,32 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
         .option("start_page", "1").option("end_page", "3")
         .load()
         .filter("pg = 2").select("id")
-      val scan = df.queryExecution.executedPlan.collectFirst {
-        case b: BatchScanExec => b.scan.asInstanceOf[HttpDistributedScan]
-      }.getOrElse(fail("no HttpDistributedScan in plan"))
+      val scan = scanOf(df)
       assert(scan.readSchema().fieldNames.toSet == Set("id", "pg"),
         "decode prunes to the referenced columns")
+      assert(scan.pushedFilters.contains(org.apache.spark.sql.sources.EqualTo("pg", 2L)))
+      assert(decodedRows(scan) == 2, "the parser keeps only page 2's rows")
       assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
+    }
+  }
+
+  test("fetch=executor: a later page's value that does not fit the page-1 type reads as null") {
+    // q is inferred bigint from page 1; Spark's JSON reader gives null for
+    // 2.5 in a bigint column, it never truncates it to 2
+    StubServer.withServer({
+      case ("GET", "/q", qs) if qs.contains("page=1&") => (200, """[{"id":1,"q":3}]""")
+      case ("GET", "/q", qs) if qs.contains("page=2&") => (200, """[{"id":2,"q":2.5}]""")
+      case ("GET", "/q", _) => (200, "[]")
+    }) { srv =>
+      val df = spark.read.format("http")
+        .option("url", srv.url("/q"))
+        .option("fetch", "executor")
+        .option("start_page", "1").option("end_page", "3")
+        .load()
+      assert(df.schema("q").dataType == org.apache.spark.sql.types.LongType)
+      val got = df.orderBy("id").collect()
+        .map(r => (r.getLong(0), Option(r.get(1)))).toSeq
+      assert(got == Seq((1L, Some(3L)), (2L, None)))
     }
   }
 

@@ -96,14 +96,34 @@ class LintSpec extends AnyFunSuite with SparkSpec {
         "the identical written chain — the decimal merges are exact; " +
         "the r14 form had the same arithmetic below a join boundary"))
 
+  /** The exact offense multiset each [[exactRoundMerge]] query produces
+    * today: a new round→decimal site in either query still fails. */
+  private val exactRoundMergeOffenses: Map[String, Seq[String]] = {
+    // m/n: one character's share of its token, written twice in the term
+    val share = "CAST(size(filter(transform(sequence(1, length(namedlambdavariable())), " +
+      "lambdafunction(substring(namedlambdavariable(), namedlambdavariable(), 1), " +
+      "namedlambdavariable())), lambdafunction((namedlambdavariable() = " +
+      "namedlambdavariable()), namedlambdavariable()))) AS DOUBLE) / " +
+      "CAST(CAST(length(namedlambdavariable()) AS DOUBLE) AS DOUBLE)"
+    Map(
+      "q_text_secrets" -> Seq(
+        "Project: CAST((namedlambdavariable() + CAST(round((((- (" + share +
+          ")) * ln((" + share + "))) / ln(2.0D)), 9) AS DECIMAL(20,9))) AS DECIMAL(20,9))"),
+      // order k uses phi_k_j·rho_(k+1-j) and phi_k_j·rho_j for j in 1..k
+      "q_ts_pacf" -> (for {
+        k <- 1 to 4; j <- 1 to k; lag <- Seq(k + 1 - j, j)
+      } yield s"Project: CAST(round((__phi_${k}_$j * rho$lag), 12) AS DECIMAL(25,12))"))
+  }
+
   test("every registered query's output path is free of round(double)→DECIMAL") {
     val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        if (exactRoundMerge.contains(name)) None
-        else {
-          val off = Lint.roundDecimalOffenses(fn(spark, sfDir))
-          if (off.nonEmpty) Some(s"$name: ${off.mkString("; ")}") else None
-        }
+        val off = Lint.roundDecimalOffenses(fn(spark, sfDir))
+        val expected =
+          if (exactRoundMerge.contains(name)) exactRoundMergeOffenses(name) else Nil
+        if (off.sorted != expected.sorted)
+          Some(s"$name: ${off.mkString("; ")} (expected ${expected.size} pinned)")
+        else None
     }
     assert(offenders.isEmpty,
       s"fragile round→decimal output paths:\n${offenders.mkString("\n")}")

@@ -1,4 +1,5 @@
 package graft
+import graft.tools.StageReport
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: one JSON line with per-query steady-state times.
@@ -53,45 +54,11 @@ object Bench {
     spin()
   }
 
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      // r15: AQE materializes independent query stages concurrently, so
-      // codegenStageId numbering varies run-to-run; with the id embedded
-      // in the generated class NAME (default), a re-run of the IDENTICAL
-      // query produces byte-different sources → codegen-cache miss → a
-      // Janino recompile inside the TIMED run with all other task threads
-      // parked on the compile KeyLock (thread-dump-verified; q_eval_chrf
-      // warm run: 6-12 recompiles ≈ +2-8 s). Constant class names make
-      // the cache key the structural source; entries are raised so
-      // shapes shared ACROSS queries survive the suite.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // task spill accounting — local mode: all executors in this JVM
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null)
-            spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      })
+    val report = StageReport.install(spark)
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -153,11 +120,11 @@ object Bench {
     val results = selected.map { case (name, fn) =>
       once(name, fn) // warmup: codegen + JIT
       val t0q = sinceStart()
-      val gc0 = gcMillis()
-      val sp0 = spillBytes.get()
+      val gc0 = StageReport.gcMillis()
+      report.clear()
       val t = once(name, fn)
-      val gcD = (gcMillis() - gc0) / 1e3
-      val spD = spillBytes.get() - sp0
+      val gcD = (StageReport.gcMillis() - gc0) / 1e3
+      val spD = report.spillBytes
       // drop this query's cached frames before the next one: operators
       // cache per invocation (session-lifetime by design), and 60+ queries
       // of accumulated storage memory otherwise inflate later queries 3-4×

@@ -63,16 +63,17 @@ final class HttpTableProvider extends TableProvider with DataSourceRegister {
   // on the driver — @volatile makes the publication safe anyway if a
   // future Spark version resolves concurrently (worst case under a race:
   // one redundant re-fetch, never a torn value).
-  @transient @volatile private var fetched: (Source, Seq[String]) = _
+  @transient @volatile private var fetched: (Source, Seq[Array[String]]) = _
 
-  private def snapshot(options: CaseInsensitiveStringMap): (Source, Seq[String]) = {
+  /** The snapshot's pages (one page for an unpaginated source). */
+  private def snapshot(options: CaseInsensitiveStringMap): Seq[Array[String]] = {
     val src = HttpTableProvider.toSource(options)
     if (fetched == null || fetched._1 != src) {
-      val rows = new HttpFetcher().fetchRows(src)
-      if (rows.isEmpty) throw EmptyResultError(src.url)
-      fetched = (src, rows)
+      val pages = new HttpFetcher().fetchPages(src).map(_.toArray)
+      if (pages.forall(_.isEmpty)) throw EmptyResultError(src.url)
+      fetched = (src, pages)
     }
-    fetched
+    fetched._2
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -87,7 +88,7 @@ final class HttpTableProvider extends TableProvider with DataSourceRegister {
         val first = new HttpFetcher().fetchPage(src.url, src.method, p, p.startPage)
         if (first.isEmpty) throw EmptyResultError(src.url)
         first
-      } else snapshot(options)._2
+      } else snapshot(options).flatten
     val spark = SparkSession.active
     import spark.implicits._
     // all-rows superset inference (documented divergence from the
@@ -100,8 +101,8 @@ final class HttpTableProvider extends TableProvider with DataSourceRegister {
                         properties: JMap[String, String]): Table = {
     val o = new CaseInsensitiveStringMap(properties)
     val src = HttpTableProvider.toSource(o)
-    val rows = if (HttpTableProvider.executorFetch(o)) None else Some(snapshot(o)._2.toArray)
-    new HttpTable(src.name, schema, rows, src)
+    val pages = if (HttpTableProvider.executorFetch(o)) None else Some(snapshot(o))
+    new HttpTable(src.name, schema, pages, src)
   }
 }
 
@@ -158,12 +159,13 @@ object HttpTableProvider {
   }
 }
 
-/** An HTTP table: the driver-fetched snapshot, or (`fetch=executor`) only
-  * the page range. The snapshot can also be read as a MICRO-BATCH stream
-  * that consumes one page per trigger (offsets ARE page numbers, so
-  * restart/recovery replays exactly the uncommitted pages). */
+/** An HTTP table: the driver-fetched snapshot (its pages), or
+  * (`fetch=executor`) only the page range. The snapshot can also be read
+  * as a MICRO-BATCH stream that consumes one page per trigger (offsets
+  * ARE page numbers, so restart/recovery replays exactly the uncommitted
+  * pages). */
 final class HttpTable(tableName: String, tableSchema: StructType,
-                      snapshot: Option[Array[String]], src: Source)
+                      snapshot: Option[Seq[Array[String]]], src: Source)
     extends Table with SupportsRead {
   override def name(): String = tableName
   override def schema(): StructType = tableSchema
@@ -177,7 +179,7 @@ final class HttpTable(tableName: String, tableSchema: StructType,
 /** Column pruning and filter pushdown. Filters over top-level columns
   * are handed to the JSON parser (as Spark's own JSON source does); all
   * of them are also returned as residual, so Spark re-checks them. */
-final class HttpScanBuilder(full: StructType, snapshot: Option[Array[String]],
+final class HttpScanBuilder(full: StructType, snapshot: Option[Seq[Array[String]]],
                             src: Source)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
@@ -208,7 +210,7 @@ final class HttpScanBuilder(full: StructType, snapshot: Option[Array[String]],
   * join planning consumes these — a small HTTP dim joined to a big fact
   * is broadcast because the scan SAYS it is small. A page range has no
   * rows to count and reports none. */
-final class HttpScan(snapshot: Option[Array[String]], required: StructType,
+final class HttpScan(snapshot: Option[Seq[Array[String]]], required: StructType,
                      fullFieldCount: Int, src: Source,
                      val pushedFilters: Seq[sources.Filter])
     extends Scan with Batch with SupportsReportStatistics {
@@ -216,24 +218,27 @@ final class HttpScan(snapshot: Option[Array[String]], required: StructType,
 
   override def readSchema(): StructType = required
   override def description(): String = {
-    val what = snapshot.fold(s"pages=${p.startPage}..${p.endPage}")(rows => s"rows=${rows.length}")
+    val what = snapshot.fold(s"pages=${p.startPage}..${p.endPage}")(pages => s"rows=${pages.map(_.length).sum}")
     s"HttpScan($what, readSchema=${required.catalogString}, " +
       s"pushedFilters=${pushedFilters.mkString("[", ", ", "]")})"
   }
   override def toBatch: Batch = this
+  // a paginated snapshot's pages are the stream's first pages: the
+  // stream starts with them cached instead of fetching them again
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new HttpMicroBatchStream(src, required)
+    new HttpMicroBatchStream(src, required,
+      if (src.pagination.isDefined) snapshot.getOrElse(Nil) else Nil)
 
   override def estimateStatistics(): Statistics = new Statistics {
-    private def known(v: Array[String] => Long) =
-      snapshot.fold(java.util.OptionalLong.empty())(rows => java.util.OptionalLong.of(v(rows)))
+    private def known(v: Iterator[String] => Long) = snapshot.fold(java.util.OptionalLong.empty())(
+      pages => java.util.OptionalLong.of(v(pages.iterator.flatMap(_.iterator))))
     // pruned columns never materialize — scale the text size by the
     // projected fraction (floor 1 field so the estimate never hits 0)
     private val frac =
       math.max(1, required.length).toDouble / math.max(1, fullFieldCount)
     override def sizeInBytes(): java.util.OptionalLong =
-      known(rows => math.max(1L, (rows.iterator.map(_.length.toLong).sum * frac).toLong))
-    override def numRows(): java.util.OptionalLong = known(_.length.toLong)
+      known(rows => math.max(1L, (rows.map(_.length.toLong).sum * frac).toLong))
+    override def numRows(): java.util.OptionalLong = known(_.size.toLong)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -241,8 +246,9 @@ final class HttpScan(snapshot: Option[Array[String]], required: StructType,
     val parallelism = SparkSession.active.sparkContext.defaultParallelism
     def per(count: Int): Int = math.max(1, (count + parallelism - 1) / parallelism)
     snapshot match {
-      case Some(rows) =>
-        rows.grouped(per(rows.length)).map(HttpInputPartition(_): InputPartition).toArray
+      case Some(pages) =>
+        pages.iterator.flatMap(_.iterator).grouped(per(pages.map(_.length).sum))
+          .map(g => HttpInputPartition(g.toArray): InputPartition).toArray
       case None =>
         val pages = p.startPage to p.endPage
         pages.grouped(per(pages.length))
@@ -316,20 +322,23 @@ final case class HttpPageOffset(page: Int) extends Offset {
   *
   * Driver-side page cache: `latestOffset` must fetch to know whether a
   * page exists, and `planInputPartitions` must hand the same rows out —
-  * the cache makes that one fetch per page. `commit` drops the committed
-  * pages, so the cache holds only pages not yet committed. After
-  * recovery the cache is cold and uncommitted pages are re-fetched
-  * (offsets are page numbers, so recovery is well-defined against any
-  * endpoint that serves stable pages — the same assumption the
-  * reference's loop makes).
+  * the cache makes that one fetch per page. It starts with `seed`: the
+  * pages of the snapshot the table was loaded with, from `start_page`
+  * on, so those are not fetched a second time; pages past them are
+  * probed live. `commit` drops the committed pages, so the cache holds
+  * only pages not yet committed. After recovery the stream is seeded
+  * from the new load's snapshot (offsets are page numbers, so recovery
+  * is well-defined against any endpoint that serves stable pages — the
+  * same assumption the reference's loop makes).
   */
-final class HttpMicroBatchStream(src: Source, required: StructType)
+final class HttpMicroBatchStream(src: Source, required: StructType,
+                                 seed: Seq[Array[String]] = Nil)
     extends MicroBatchStream {
 
   private val p = src.pagination.getOrElse(Pagination())
   @transient private lazy val fetcher = new HttpFetcher()
-  @transient private[connector] lazy val cache =
-    scala.collection.mutable.Map.empty[Int, Array[String]]
+  @transient private[connector] lazy val cache = scala.collection.mutable.Map.from(
+    seed.iterator.zipWithIndex.map { case (rows, i) => (p.startPage + i) -> rows })
 
   private def pageRows(page: Int): Array[String] = cache.synchronized {
     cache.get(page) match {

@@ -91,22 +91,30 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
 
   /** Fetch a source's full snapshot: single request, or the bounded
     * pagination loop when `source.pagination` is set. */
-  def fetchRows(source: Source): Seq[String] = source.pagination match {
-    case None => toRows(fetchJson(source.url, source.method))
-    case Some(p) => fetchPaginated(source.url, source.method, p)
+  def fetchRows(source: Source): Seq[String] = fetchPages(source).flatten
+
+  /** The same snapshot page by page: one page for a single request; with
+    * pagination, every page from `start_page` before the first null or
+    * empty one, up to `end_page`. */
+  def fetchPages(source: Source): Seq[Seq[String]] = source.pagination match {
+    case None => Seq(toRows(fetchJson(source.url, source.method)))
+    case Some(p) => pages(source.url, source.method, p)
   }
 
-  def fetchPaginated(url: String, method: String, p: Pagination): Seq[String] = {
-    val rows = Seq.newBuilder[String]
+  def fetchPaginated(url: String, method: String, p: Pagination): Seq[String] =
+    pages(url, method, p).flatten
+
+  private def pages(url: String, method: String, p: Pagination): Seq[Seq[String]] = {
+    val pages = Seq.newBuilder[Seq[String]]
     var page = p.startPage
     var done = false
     while (!done && page <= p.endPage) {
       val node = fetchJson(pageUrl(url, p, page), method)
       val pageRows = toRows(node)
       if (node.isNull || pageRows.isEmpty) done = true  // null OR empty terminates
-      else { rows ++= pageRows; page += 1 }
+      else { pages += pageRows; page += 1 }
     }
-    rows.result()
+    pages.result()
   }
 
   /** One page's rows (the unit the streaming source consumes per

@@ -639,9 +639,7 @@ object Behavior {
     * 9-dp rounds summed as DECIMAL(28,9), re-round per iteration. */
   def absorbingQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     val wSeq = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val q = t(s, dir, "events")
       .select($"user_id", $"ts", $"event_id", $"event_type".as("src"))

@@ -93,9 +93,7 @@ object Cluster {
     * from the fixed smallest-vec_id init. */
   def kmeansQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     val mv = Centroids.micro(s, dir).select($"vec_id", $"mv")
     var cent = mv.orderBy($"vec_id").limit(K)
       .withColumn("cid", row_number().over(Window.orderBy($"vec_id")) - 1)
@@ -217,9 +215,7 @@ object Cluster {
     * shared smallest-vec_id init — checkpointed k×m-row frame. */
   private def pqCodebook(s: SparkSession, dir: String, sub: DataFrame): DataFrame = {
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     val ids = Centroids.micro(s, dir).select($"vec_id", $"mv")
       .orderBy($"vec_id").limit(PqK)
       .withColumn("cid", row_number().over(Window.orderBy($"vec_id")) - 1)
@@ -406,9 +402,7 @@ object Cluster {
     * oracle mirrors it as an unrolled CTE chain. */
   def kcenterQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     val mv = Centroids.micro(s, dir).select($"vec_id", $"mv")
     var md = mv
       .crossJoin(broadcast(mv.filter($"vec_id" === 0).select($"mv".as("cv"))))

@@ -1009,7 +1009,7 @@ object Dedup {
       .select($"g")
     // r16: rareDocs is referenced by both the probe window and the
     // candidate join's posting side — uncached, the explode + df-filter
-    // subtree ran twice (TimeQ: two identical 5.2 MB gram exchanges).
+    // subtree ran twice (`Dev time`: two identical 5.2 MB gram exchanges).
     // Rare-gram postings are df-capped (≤10 rows/gram), far smaller than
     // the cached shingle sets. Session-cache convention as `sh`.
     val rareDocs = ex.join(rare, Seq("g")).cache()

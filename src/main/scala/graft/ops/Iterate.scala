@@ -52,9 +52,7 @@ object Iterate {
   def fixpoint(init: DataFrame, maxIter: Int, what: String)(
       step: DataFrame => DataFrame): DataFrame = {
     val s = init.sparkSession
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-").toString)
+    graft.Session.ensureCheckpointDir(s)
     var state = init
     var converged = false
     var i = 0

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utilities: smoke-run the flagship entry, explain/run any named
   * query from SparkEntry.queries, or sweep every plan for red flags.
   *
@@ -10,6 +8,7 @@ import org.apache.spark.sql.SparkSession
   *   tools/run.sh graft.tools.Dev explain <name> [sfDir]
   *   tools/run.sh graft.tools.Dev show <name> [sfDir]
   *   tools/run.sh graft.tools.Dev audit [_] [sfDir]
+  *   tools/run.sh graft.tools.Dev time <name | SQL> [sfDir] [iters]
   */
 object Dev {
   /** Queries whose single-partition window runs over a frame BOUNDED
@@ -66,20 +65,7 @@ object Dev {
       "cume_dist/percent_rank/ntile semantics under test"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(graft.Tables.nanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      // deterministic codegen-cache keys across AQE stage-number jitter
-      // (see Bench.scala) — cuts warm-run Janino recompile storms
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("ERROR")
     val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     args(0) match {
       case "entry" =>
@@ -115,52 +101,38 @@ object Dev {
         val t0 = System.nanoTime()
         spark.sql(args(1)).show(50, truncate = false)
         println(f"SQL WALL: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      case "sqltime" =>
-        // warm noop-sink timing of a raw SQL probe: N iterations in one
-        // JVM (first is codegen/JIT warmup), per-iteration wall printed —
-        // the micro-A/B harness for isolating a pipeline stage's cost
-        graft.Tables.registerAll(spark, dir)
-        graft.functions.GraftFunctions.register(spark)
-        val iters = if (args.length > 3) args(3).toInt else 3
-        def gcMs(): Long = {
-          import scala.jdk.CollectionConverters._
-          java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-            .asScala.map(_.getCollectionTime).sum
-        }
-        val stLines = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-        val stTask = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Int)]()
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-              val si = s.stageInfo
-              val wall = (for { a <- si.completionTime; b <- si.submissionTime } yield a - b).getOrElse(0L)
-              stLines.put(si.stageId, f"stage ${si.stageId}%3d wall=${wall / 1e3}%7.3f s tasks=${si.numTasks}%4d shufR=${si.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6}%8.1f MB shufW=${si.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6}%8.1f MB")
-            }
-            override def onTaskEnd(
-                t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              val m = t.taskMetrics
-              if (m != null) stTask.compute(t.stageId, (_, v) => {
-                val (tot, mx, n) = if (v == null) (0L, 0L, 0) else v
-                (tot + m.executorRunTime, math.max(mx, m.executorRunTime), n + 1)
-              })
-            }
-          })
-        for (i <- 0 until iters) {
-          if (i == iters - 1) { stLines.clear(); stTask.clear() }
-          val g0 = gcMs()
-          val t0 = System.nanoTime()
-          spark.sql(args(1)).write.format("noop").mode("overwrite").save()
-          println(f"SQLTIME iter $i: ${(System.nanoTime() - t0) / 1e9}%.3f s gc=${(gcMs() - g0) / 1e3}%.2f s")
-        }
-        Thread.sleep(500)
-        locally {
-          import scala.jdk.CollectionConverters._
-          stLines.asScala.toSeq.sortBy(_._1).foreach { case (id, line) =>
-            val (tot, mx, n) = stTask.getOrDefault(id, (0L, 0L, 0))
-            println(line + f"  taskSum=${tot / 1e3}%7.3f s taskMax=${mx / 1e3}%6.3f s n=$n%d")
+      case "time" =>
+        // Dev time <query-name | SQL> [sfDir] [iters]: noop-sink timing
+        // of a registered query, or of any other argument run as SQL over
+        // the test tables. Per iteration: frame construction (eager
+        // bounds / spread / checkpoint jobs an operator runs while
+        // building its frame), save, GC and codegen compiles; each
+        // iteration starts from empty session caches. The stage and job
+        // tables cover the last iteration only.
+        val frame: () => org.apache.spark.sql.DataFrame =
+          graft.SparkEntry.queries.get(args(1)) match {
+            case Some(fn) => () => fn(spark, dir)
+            case None =>
+              graft.Tables.registerAll(spark, dir)
+              graft.functions.GraftFunctions.register(spark)
+              () => spark.sql(args(1))
           }
+        val iters = if (args.length > 3) args(3).toInt else 3
+        val report = StageReport.install(spark)
+        for (i <- 0 until iters) {
+          if (i == iters - 1) report.clear()
+          val g0 = StageReport.gcMillis()
+          val c0 = StageReport.codegenCompiles()
+          val t0 = System.nanoTime()
+          val df = frame()
+          val t1 = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save()
+          val t2 = System.nanoTime()
+          println(f"iter $i%d construct=${(t1 - t0) / 1e9}%.3f s  save=${(t2 - t1) / 1e9}%.3f s  total=${(t2 - t0) / 1e9}%.3f s  gc=${(StageReport.gcMillis() - g0) / 1e3}%.2f s  codegenCompiles=${StageReport.codegenCompiles() - c0}%d")
+          spark.catalog.clearCache()
         }
+        Thread.sleep(500) // let the listener bus deliver the last events
+        report.print()
       case "dump" =>
         // single-query verify dump (same shape Verify.scala writes), so
         // one new query can be oracle-checked without a full sweep
@@ -408,7 +380,7 @@ object Dev {
           spark.catalog.clearCache()
         }
       case other =>
-        System.err.println(s"unknown mode '$other' — usage: entry | explain <q> [sfDir] | show <q> [sfDir] | dump <q> [sfDir] | audit [_] [sfDir]")
+        System.err.println(s"unknown mode '$other' — usage: entry | explain <q> [sfDir] | show <q> [sfDir] | time <q | SQL> [sfDir] [iters] | dump <q> [sfDir] | audit [_] [sfDir]")
     }
     spark.stop()
   }

@@ -521,15 +521,7 @@ object Fuzz {
     val outDir = args(1)
     val seed = if (args.length > 2) args(2).toLong else 42L
     val count = if (args.length > 3) args(3).toInt else 150
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.Tables.nanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("ERROR")
     graft.Tables.registerAll(spark, sfDir)
     val cs = cases(seed, count)
     var failed = 0

@@ -11,20 +11,5 @@ trait SparkSpec {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      // deterministic codegen-cache keys across AQE stage-number jitter
-      // (see Bench.scala) — cuts warm-run Janino recompile storms
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = Session.local("ERROR")
 }

@@ -357,6 +357,24 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("readStream fetches each snapshot page once: the stream starts from the load's pages") {
+    val hits = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    StubServer.withServer(pagedRoutes(3, hits)) { srv =>
+      val q = spark.readStream.format("http")
+        .option("url", srv.url("/docs")).option("paginate", "true")
+        .option("start_page", "1").option("end_page", "10")
+        .load()
+        .writeStream.format("memory").queryName("http_pages_once").start()
+      try {
+        q.processAllAvailable()
+        val ids = spark.table("http_pages_once").collect().map(_.getAs[Long]("id")).sorted
+        assert(ids.toSeq == (1L to 6L))
+        assert((1 to 3).forall(hits.get(_) == 1),
+          s"each snapshot page must be fetched exactly once: $hits")
+      } finally q.stop()
+    }
+  }
+
   // ---- fetch=executor: distributed page-range scan ----
 
   test("fetch=executor reads every page without a driver snapshot") {

@@ -32,12 +32,15 @@ object Tables {
   private val handles =
     new java.util.concurrent.ConcurrentHashMap[(Int, String, String, String), DataFrame]()
 
-  private def listingFp(path: String): String = {
-    import java.nio.file.{Files, Paths}
+  private[graft] def listingFp(path: String): String = {
+    import java.nio.file.{Files, NoSuchFileException, Paths}
     import scala.jdk.CollectionConverters._
     val d = Paths.get(path)
+    // a file listed but gone by the time it is stat'ed (or a dangling
+    // symlink) reads as absent: a fresh key, not a failed table load
     def stat(p: java.nio.file.Path): String =
-      s"$p:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
+      try s"$p:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
+      catch { case _: NoSuchFileException => s"$p:absent" }
     if (Files.isDirectory(d)) {
       val stream = Files.list(d)
       try stream.iterator().asScala.toSeq.sortBy(_.toString)

@@ -122,16 +122,17 @@ object Curate {
     * deterministic tiebreak. One row per non-singleton cluster: the
     * representative, the kept doc, member count, kept/dropped chars.
     *
-    * Distributed shape: clusters come from the checkpointed label
-    * propagation over the once-per-JVM pair artifact (graph of verified
-    * near-dups — tiny relative to the corpus), document lengths join in
+    * Distributed shape: clusters come from
+    * [[Graph.connectedComponentsStar]] over the once-per-JVM pair
+    * artifact (graph of verified near-dups — tiny relative to the
+    * corpus), document lengths join in
     * by id, and the per-cluster argmax is ONE map-side-combinable
     * aggregate — `max(struct(n_chars, -doc_id))` packs the whole
     * keep-policy into a comparable struct, so no window sort and no
     * second shuffle. Corpus text never moves. */
   def canonicalQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val labels = Dedup.duplicateClusters(Dedup.verifiedPairs(s, dir))
+    val labels = Graph.connectedComponentsStar(Dedup.verifiedPairs(s, dir))
       .select($"id".as("doc_id"), $"label".as("cluster_id"))
     val sized = labels.join(
       t(s, dir, "documents").select($"doc_id", $"n_chars"), Seq("doc_id"))

@@ -501,53 +501,17 @@ object Dedup {
       |WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
       |ORDER BY doc_id""".stripMargin
 
-  /** Connected components over an undirected duplicate-pair list by
-    * min-label propagation: every node iteratively adopts the smallest
-    * label among itself and its neighbours until fixpoint, which is
-    * reached after diameter(G) rounds. This is the GENERAL form of
-    * duplicate grouping — [[dropNearDuplicates]]'s cheaper anti-join is
-    * exact only on clique-shaped groups, while label propagation is
-    * exact on chains/stars too (A~B, B~C but A≁C still groups {A,B,C}).
-    *
-    * Distributed shape: each round is one equi-join + min-aggregate on
-    * node ids — label frames carry (id, label) only, never documents.
-    * Only the EDGE LIST is cached (session CacheManager — freed by
-    * `clearCache`); the round loop — eager per-round checkpointing,
-    * checkpoint-file convergence scan, throw on maxIter — is
-    * [[Iterate.fixpoint]], shared with [[Graph.pagerankConverged]].
-    * (`localCheckpoint` was measured here as a cross-query storage
-    * leak — later dedup queries inflated up to 6× — which is why
-    * Iterate uses reliable checkpoints; spec-asserted.)
-    *
-    * Returns (id, label) for every node that appears in `pairs`. */
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
-      .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .distinct().cache()
-    val init = edges.select($"src".as("id")).distinct()
-      .withColumn("label", $"id")
-    // maxIter bound = duplicate-graph diameter; near-clique dedup
-    // graphs converge in 2-3 rounds
-    Iterate.fixpoint(init, maxIter, "duplicateClusters") { labels =>
-      val nbrMin = edges.join(labels, $"dst" === $"id")
-        .groupBy($"src").agg(min($"label").as("nbr"))
-      // one join per round serves both the next labels and the
-      // convergence check: a label changes iff a neighbour min is
-      // strictly smaller than the current label
-      labels.join(nbrMin, $"id" === $"src", "left")
-        .select($"id", least($"label", coalesce($"nbr", $"label")).as("label"),
-          (coalesce($"nbr", $"label") < $"label").as("chg"))
-    }
-  }
-
   /** Driver-checkable clustering of the whole corpus: every doc with its
     * duplicate-cluster representative (the smallest doc_id reachable
-    * through verified near-dup pairs; singletons represent themselves). */
+    * through verified near-dup pairs; singletons represent themselves).
+    * Clusters are the connected components of the pair graph, from
+    * [[Graph.connectedComponentsStar]]: exact on chains and stars too
+    * (A~B, B~C but A≁C still groups {A,B,C}), where
+    * [[dropNearDuplicates]]'s anti-join is exact only on clique-shaped
+    * groups. */
   def clustersQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val labels = duplicateClusters(PairArtifact.pairs(s, dir))
+    val labels = Graph.connectedComponentsStar(PairArtifact.pairs(s, dir))
       .select($"id".as("doc_id"), $"label")
     t(s, dir, "documents").select($"doc_id")
       .join(labels, Seq("doc_id"), "left")

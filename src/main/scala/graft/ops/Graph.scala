@@ -6,10 +6,9 @@ import graft.Tables.t
 
 /** Iterative graph analytics — PageRank over the nation-level trade
   * graph (customer nation → supplier nation, weighted by lineitem
-  * count). The Pregel-shaped companion to [[Dedup.duplicateClusters]]'
-  * label propagation: per iteration, ranks JOIN edges on src, partial
-  * contributions GROUP BY dst, repeat. On a web/citation/link corpus
-  * the same plan ranks documents for crawl prioritization and
+  * count). Pregel-shaped: per iteration, ranks JOIN edges on src,
+  * partial contributions GROUP BY dst, repeat. On a web/citation/link
+  * corpus the same plan ranks documents for crawl prioritization and
   * quality-weighted sampling.
   *
   * Scale shape: the expensive part is building the EDGE LIST (lineitem
@@ -17,12 +16,12 @@ import graft.Tables.t
   * broadcast-dimension joins + a combinable groupBy, paid ONCE — the
   * aggregated edge frame is eagerly checkpointed so the three rank
   * iterations re-read a tiny materialized table instead of re-running
-  * the corpus joins (the [[Dedup.duplicateClusters]] lineage-cut
-  * lesson). Each iteration shuffles only |edges| contribution rows
-  * (≤ |nodes|²) keyed by dst; rank frames are |nodes| rows and
-  * broadcast into the edge join. Iterations here are unrolled (fixed
-  * 3) so the oracle can mirror them as chained CTEs; the driver loop
-  * generalizes to convergence exactly as duplicateClusters does.
+  * the corpus joins (the [[Iterate]] lineage-cut lesson). Each
+  * iteration shuffles only |edges| contribution rows (≤ |nodes|²)
+  * keyed by dst; rank frames are |nodes| rows and broadcast into the
+  * edge join. Iterations here are unrolled (fixed 3) so the oracle can
+  * mirror them as chained CTEs; the driver loop generalizes to
+  * convergence as [[pagerankConverged]] does.
   *
   * Determinism contract: per-edge contributions are one shared IEEE
   * expression (rank·w/outw in double) rounded to 9 dp, summed as
@@ -683,14 +682,13 @@ object Graph {
     * depth, influence radius). Unreached nodes are reported with hop
     * −1 so the output also names the disconnected remainder.
     *
-    * Iterative frontier relaxation via [[Iterate.fixpoint]] (hop(v) →
-    * min(hop(v), min over nbrs hop+1); converges in diameter rounds,
-    * each one equi-join + combinable min over (id, hop) frames); the
-    * oracle expresses the same reachability as a recursive CTE with a
-    * min-hop rollup, the [[Dedup.clustersSql]] stance. */
+    * Iterative frontier relaxation by the one-root form of [[hops]]
+    * (converges in diameter rounds, each one equi-join + combinable min
+    * over (root, id, hop) frames); the oracle expresses the same
+    * reachability as a recursive CTE with a min-hop rollup, the
+    * [[Dedup.clustersSql]] stance. */
   def bfsQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val inf = 999L
     val und = strongUndirected(s, dir).cache()
     // anchor = highest-strong-degree node (smallest name on ties) — a
     // data-chosen hub, so the query is non-vacuous at every SF; the
@@ -698,24 +696,47 @@ object Graph {
     val root = und.groupBy($"src").agg(count(lit(1)).as("deg"))
       .orderBy($"deg".desc, $"src").limit(1)
       .select($"src".as("root"))
-    val init = t(s, dir, "nation").select($"n_name".as("id"))
-      .crossJoin(broadcast(root))
-      .withColumn("hop", when($"id" === $"root", 0L).otherwise(inf))
-    val converged = Iterate.fixpoint(init, 30, "bfs") { state =>
-      val relaxed = broadcast(und)
-        .join(state.select($"id".as("dst"), ($"hop" + 1).as("cand")),
-          Seq("dst"))
-        .groupBy($"src").agg(min($"cand").as("nbr"))
+    hops(und, t(s, dir, "nation").select($"n_name".as("id")), root, "bfs")
+      .select($"id".as("node"), $"root",
+        when($"hop" >= unreached, lit(-1L)).otherwise($"hop").as("hop"))
+      .orderBy($"node")
+  }
+
+  /** Hop value [[hops]] gives a (root, node) pair the search never
+    * reaches. */
+  private[ops] val unreached = 999L
+
+  /** Multi-source BFS: the hop distance from every root in `roots`
+    * (column `root`) to every node in `nodes` (column `id`) over the
+    * symmetric edge list `und` (src, dst), as (root, id, hop) with
+    * [[unreached]] for pairs in different components. The kernel behind
+    * [[bfsQ]] (one root), [[closenessQ]], [[betweennessQ]] and
+    * [[diameterQ]] (every node a root).
+    *
+    * One [[Iterate.fixpoint]] relaxes every source at once: per round,
+    * hop(r, v) → min(hop(r, v), min over neighbours u of hop(r, u) + 1)
+    * — one join of the (root, id, hop) frame against the broadcast edge
+    * list plus a (root, node) min, the plan one source needs, ×|roots|
+    * frame rows, not ×|roots| passes over the data. Converges in
+    * diameter rounds; the frame is |roots|·|nodes| rows regardless of
+    * corpus size. `what` names the loop in the non-convergence error. */
+  private[ops] def hops(und: DataFrame, nodes: DataFrame, roots: DataFrame,
+      what: String): DataFrame = {
+    val s = und.sparkSession
+    import s.implicits._
+    val init = roots.crossJoin(nodes)
+      .withColumn("hop", when($"id" === $"root", 0L).otherwise(unreached))
+    Iterate.fixpoint(init, 30, what) { state =>
+      val relaxed = state
+        .select($"root".as("r2"), $"id".as("dst"), ($"hop" + 1).as("cand"))
+        .join(broadcast(und), Seq("dst"))
+        .groupBy($"r2", $"src").agg(min($"cand").as("nbr"))
       state
-        .join(broadcast(relaxed), $"id" === $"src", "left")
-        .select($"id", $"root",
+        .join(broadcast(relaxed), $"id" === $"src" && $"root" === $"r2", "left")
+        .select($"root", $"id",
           least($"hop", coalesce($"nbr", $"hop")).as("hop"),
           (coalesce($"nbr", $"hop") < $"hop").as("chg"))
     }
-    converged
-      .select($"id".as("node"), $"root",
-        when($"hop" >= inf, lit(-1L)).otherwise($"hop").as("hop"))
-      .orderBy($"node")
   }
 
   val bfsSql: String =
@@ -1181,18 +1202,19 @@ object Graph {
 
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SOCC 2014) — the sub-diameter-rounds alternative to
-    * [[Dedup.duplicateClusters]]'s min-label propagation. Propagation
-    * needs diameter(G) rounds; on a 100 TB duplicate graph with long
-    * chains (crawl re-post chains, quote cascades) that can be
-    * hundreds. The star operations contract paths aggressively and
-    * converge in O(log n) rounds regardless of diameter:
+    * SOCC 2014) — graft's one connected-components operator, used by
+    * near-dup clustering, canonical selection, entity resolution and
+    * DBSCAN. Min-label propagation would need diameter(G) rounds; on
+    * a 100 TB duplicate graph with long chains (crawl re-post chains,
+    * quote cascades) that can be hundreds. The star operations
+    * contract paths aggressively and converge in O(log n) rounds
+    * regardless of diameter:
     *  - LARGE-STAR, per node u over its full neighborhood:
     *    m = min(Γ(u) ∪ {u}); re-point every neighbor v > u at m.
     *  - SMALL-STAR, per node u over its ≤-neighbors (canonical child →
     *    parent edges grouped by child): m = min of u's parents; point
     *    u and each of its other parents at m.
-    * Both are one groupBy-min + one join — label frames carry ids
+    * Each is one min-over-partition window — label frames carry ids
     * only, never documents. Each round is eagerly checkpointed (the
     * [[Iterate]] rationale: lineage cut, no O(rounds²) recompute);
     * convergence is edge-set stability, checked as (count,
@@ -1200,8 +1222,12 @@ object Graph {
     * cheap scans, no extra join. At the fixpoint the edge set IS the
     * component star: every non-root points at its component min.
     *
-    * Returns (id, label) for every node in `pairs` — the
-    * [[Dedup.duplicateClusters]] contract, spec-asserted equal. */
+    * The hash-sum adds 64-bit `xxhash64` values: a 32-bit hash sum
+    * collides far more readily and can make a changed edge set look
+    * stable. Throws when `maxIter` rounds do not reach the fixpoint.
+    *
+    * Returns (id, label) for every node in `pairs` (columns doc_a,
+    * doc_b), label = the smallest id in the node's component. */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
@@ -1285,43 +1311,26 @@ object Graph {
     * (0 when v is isolated); harmonic(v) = Σᵤ 1/d(v,u) — defined even
     * on disconnected graphs, which is why both are reported.
     *
-    * Implementation: MULTI-SOURCE BFS — one [[Iterate.fixpoint]] over
-    * the (root, node, hop) frame relaxes every source simultaneously
-    * (per round: one join of the frame against the edge list + a
-    * (root, node) min — the same plan a single source needs, ×|V|
-    * frame rows, NOT ×|V| passes over the data). The frame is
-    * node²-bounded (nations: 625 rows) regardless of corpus size; the
-    * corpus is touched exactly once, in the shared edge collapse.
+    * Implementation: MULTI-SOURCE BFS — [[hops]] with every node as a
+    * root relaxes all sources in one fixpoint over the node²-bounded
+    * (root, node, hop) frame (nations: 625 rows) regardless of corpus
+    * size; the corpus is touched exactly once, in the shared edge
+    * collapse.
     *
     * Determinism: hops are exact integers; closeness is one IEEE
     * divide of exact ints; harmonic's 1/d terms round to 9 dp and sum
     * as DECIMAL(28,9) (order-independent). */
   def closenessQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val inf = 999L
     val und = strongUndirected(s, dir).cache()
     val nodes = t(s, dir, "nation").select($"n_name".as("id"))
-    val init = nodes.select($"id".as("root"))
-      .crossJoin(nodes)
-      .withColumn("hop", when($"id" === $"root", 0L).otherwise(inf))
-    val converged = Iterate.fixpoint(init, 30, "closeness multi-bfs") { state =>
-      val relaxed = state
-        .select($"root".as("r2"), $"id".as("dst"), ($"hop" + 1).as("cand"))
-        .join(broadcast(und), Seq("dst"))
-        .groupBy($"r2", $"src").agg(min($"cand").as("nbr"))
-      state
-        .join(broadcast(relaxed), $"id" === $"src" && $"root" === $"r2", "left")
-        .select($"root", $"id",
-          least($"hop", coalesce($"nbr", $"hop")).as("hop"),
-          (coalesce($"nbr", $"hop") < $"hop").as("chg"))
-    }
-    converged
+    hops(und, nodes, nodes.select($"id".as("root")), "closeness multi-bfs")
       .groupBy($"root")
       .agg(
-        sum(when($"hop" < inf, 1L).otherwise(0L)).as("n_reach"),
-        sum(when($"hop" > 0 && $"hop" < inf, $"hop").otherwise(0L))
+        sum(when($"hop" < unreached, 1L).otherwise(0L)).as("n_reach"),
+        sum(when($"hop" > 0 && $"hop" < unreached, $"hop").otherwise(0L))
           .as("sum_dist"),
-        sum(when($"hop" > 0 && $"hop" < inf,
+        sum(when($"hop" > 0 && $"hop" < unreached,
           round(lit(1d) / $"hop", 9)).otherwise(lit(0d))
           .cast("decimal(28,9)")).as("harm"))
       .select($"root".as("node"), $"n_reach", $"sum_dist",
@@ -1380,7 +1389,7 @@ object Graph {
     * triple join, NOT Brandes' backward pass (whose per-source
     * dependency recursion is sequential in level and awkward to
     * mirror in SQL):
-    *   1. hop(s,v): the [[closenessQ]] multi-source BFS frame;
+    *   1. hop(s,v): the multi-source [[hops]] frame;
     *   2. σ(s,v): shortest-path COUNTS by level-synchronous DP —
     *      σ(s,v) = Σ_{u: hop(s,u)+1 = hop(s,v)} σ(s,u), iterated to
     *      fixpoint (σ at level ℓ is correct after ℓ rounds; counts
@@ -1404,23 +1413,10 @@ object Graph {
     * same DAG. */
   def betweennessQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val inf = 999L
     val und = strongUndirected(s, dir).cache()
     val nodes = t(s, dir, "nation").select($"n_name".as("id"))
-    val init = nodes.select($"id".as("root"))
-      .crossJoin(nodes)
-      .withColumn("hop", when($"id" === $"root", 0L).otherwise(inf))
-    val dist = Iterate.fixpoint(init, 30, "betweenness multi-bfs") { state =>
-      val relaxed = state
-        .select($"root".as("r2"), $"id".as("dst"), ($"hop" + 1).as("cand"))
-        .join(broadcast(und), Seq("dst"))
-        .groupBy($"r2", $"src").agg(min($"cand").as("nbr"))
-      state
-        .join(broadcast(relaxed), $"id" === $"src" && $"root" === $"r2", "left")
-        .select($"root", $"id",
-          least($"hop", coalesce($"nbr", $"hop")).as("hop"),
-          (coalesce($"nbr", $"hop") < $"hop").as("chg"))
-    }
+    val dist = hops(und, nodes, nodes.select($"id".as("root")),
+      "betweenness multi-bfs")
     val sig0 = dist
       .withColumn("sigma", when($"hop" === 0, 1L).otherwise(0L))
     val sig = Iterate.fixpoint(sig0, 30, "betweenness sigma-dp") { state =>
@@ -1438,7 +1434,7 @@ object Graph {
           (when($"hop" === 0, lit(1L))
             .otherwise(coalesce($"sg", lit(0L))) =!= $"sigma").as("chg"))
     }
-    val f = sig.filter($"hop" < inf).cache()
+    val f = sig.filter($"hop" < unreached).cache()
     val sv = f.select($"root".as("s"), $"id".as("v"),
       $"hop".as("d1"), $"sigma".as("sig1"))
     val vt = f.select($"root".as("v"), $"id".as("tt"),
@@ -1520,8 +1516,8 @@ object Graph {
 
   /** q_graph_diameter entry: DISTANCE HISTOGRAM + exact and EFFECTIVE
     * diameter of the strong undirected trade graph — the pairwise-hop
-    * distribution from multi-source BFS (the [[closenessQ]] frontier
-    * relaxation re-aggregated by distance instead of by root), the
+    * distribution from multi-source BFS ([[hops]], re-aggregated by
+    * distance instead of by root as [[closenessQ]] does), the
     * exact diameter (max finite hop), and the 90%-effective diameter
     * (smallest h covering ≥ 90% of reachable ordered pairs — the
     * metric reported for web/social graphs since Leskovec et al.'s
@@ -1535,25 +1531,11 @@ object Graph {
   def diameterQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val inf = 999L
     val und = strongUndirected(s, dir).cache()
     val nodes = t(s, dir, "nation").select($"n_name".as("id"))
-    val init = nodes.select($"id".as("root"))
-      .crossJoin(nodes)
-      .withColumn("hop", when($"id" === $"root", 0L).otherwise(inf))
-    val converged = Iterate.fixpoint(init, 30, "diameter multi-bfs") { state =>
-      val relaxed = state
-        .select($"root".as("r2"), $"id".as("dst"), ($"hop" + 1).as("cand"))
-        .join(broadcast(und), Seq("dst"))
-        .groupBy($"r2", $"src").agg(min($"cand").as("nbr"))
-      state
-        .join(broadcast(relaxed), $"id" === $"src" && $"root" === $"r2", "left")
-        .select($"root", $"id",
-          least($"hop", coalesce($"nbr", $"hop")).as("hop"),
-          (coalesce($"nbr", $"hop") < $"hop").as("chg"))
-    }
-    val hist = converged
-      .filter($"hop" > 0 && $"hop" < inf)
+    val hist = hops(und, nodes, nodes.select($"id".as("root")),
+        "diameter multi-bfs")
+      .filter($"hop" > 0 && $"hop" < unreached)
       .groupBy($"hop").agg(count(lit(1)).as("n_pairs"))
     val wCum = Window.partitionBy(lit(0)).orderBy($"hop")
     val wAll = Window.partitionBy(lit(0))
@@ -1871,87 +1853,6 @@ object Graph {
        |$steps
        |$unions
        |ORDER BY w DESC, a, b""".stripMargin
-  }
-
-  /** CONNECTED COMPONENTS by alternating large-star / small-star
-    * contraction (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
-    * SoCC 2014) — the sub-diameter-round alternative to
-    * [[Dedup.duplicateClusters]]'s min-label propagation. Label
-    * propagation needs DIAMETER rounds (a 1M-node chain = 1M rounds);
-    * star contraction provably converges in O(log² n) (in practice
-    * ~log n) rounds regardless of diameter, because each large-star
-    * hop re-points every node past its neighborhood minimum and each
-    * small-star collapses the resulting partial stars. At 100 TB
-    * cluster graphs with long chains (transitive near-dup families,
-    * web link chains) this is the difference between a job that
-    * finishes and one that cannot.
-    *
-    * Rounds: large-star connects every strictly-larger neighbor of u
-    * to m(u) = min(Γ(u) ∪ {u}); small-star connects every ≤-neighbor
-    * (and u) to m(u); both emit canonical (u < v) edges, checkpointed
-    * per round; convergence = edge set unchanged (count + order-
-    * independent hash checksum — one cheap agg on the fresh
-    * checkpoint). At the fixpoint the edges form stars rooted at each
-    * component's minimum, so labels read directly off the edges.
-    *
-    * Returns (labels(id, label), rounds) — the round count is the
-    * measurable sub-diameter claim, asserted in `GraphSpec` against a
-    * 100-node chain that label propagation's default budget cannot
-    * finish. */
-  def ccStar(pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
-    val s = pairs.sparkSession
-    import s.implicits._
-    graft.Session.ensureCheckpointDir(s)
-    val nodes = pairs.select($"u".as("id")).union(pairs.select($"v".as("id")))
-      .distinct().checkpoint()
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), sum(hash($"u", $"v").cast("long"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var e = pairs.select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
-      .filter($"u" =!= $"v").distinct().checkpoint()
-    var sig = checksum(e)
-    var rounds = 0
-    var converged = false
-    // Static rounds + shuffle_hash hints: the Iterate.fixpoint r16
-    // loop-planning contract (corpus-scaled label frames — see
-    // connectedComponentsStar for the full rationale).
-    // Partition-window star rounds — the connectedComponentsStar r16
-    // shape (one min-over-partition window per star instead of a
-    // groupBy + self-join; set-identical, 3 exchanges per round).
-    val wA = org.apache.spark.sql.expressions.Window.partitionBy($"a")
-    val wV = org.apache.spark.sql.expressions.Window.partitionBy($"v")
-    Iterate.staticRounds(s, e) {
-      while (!converged && rounds < maxIter) {
-        // large-star: every strictly-larger neighbor re-points to m(u)
-        val sym = e.select($"u".as("a"), $"v".as("b"))
-          .union(e.select($"v".as("a"), $"u".as("b")))
-        val large = sym
-          .withColumn("m", least($"a", min($"b").over(wA)))
-          .filter($"b" > $"a" && $"b" =!= $"m")
-          .select($"m".as("u"), $"b".as("v"))
-        // small-star: every ≤-neighbor (u-side of canonical edges) and
-        // the center re-point to m(center)
-        val small = large
-          .withColumn("m", min($"u").over(wV))
-          .select($"m".as("u"),
-            when($"u" === $"m", $"v").otherwise($"u").as("v"))
-          .filter($"u" =!= $"v").distinct()
-          .checkpoint()
-        val nsig = checksum(small)
-        converged = nsig == sig
-        sig = nsig
-        e = small
-        rounds += 1
-      }
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"ccStar did not converge within maxIter=$maxIter rounds")
-    val labels = nodes.join(e.select($"v".as("id"), $"u".as("label")),
-        Seq("id"), "left")
-      .select($"id", coalesce($"label", $"id").as("label"))
-    (labels, rounds)
   }
 
   /** q_graph_katz entry: truncated KATZ centrality (Katz 1953) over

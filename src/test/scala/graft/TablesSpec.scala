@@ -154,4 +154,21 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
     assert(drift.isEmpty,
       s"TESTDATA VALUE DRIFT (regenerated fixture?):\n${drift.mkString("\n")}")
   }
+
+  test("listing fingerprint: a file gone before its stat reads as absent, no throw") {
+    val dir = Files.createTempDirectory("graft-listing").resolve("t.parquet")
+    Files.createDirectory(dir)
+    Files.write(dir.resolve("part-1.parquet"), Array[Byte](1, 2, 3))
+    // a dangling symlink is a listed entry whose stat finds no file —
+    // what a file deleted between the listing and its stat looks like
+    val link = dir.resolve("part-0.parquet")
+    val target = dir.getParent.resolve("missing")
+    Files.createSymbolicLink(link, target)
+    val fp = Tables.listingFp(dir.toString)
+    assert(fp.linesIterator.toSeq.head == s"$link:absent")
+    assert(fp.contains(s"${dir.resolve("part-1.parquet")}:3:"))
+    // the file appearing behind the link gives a different key
+    Files.write(target, Array[Byte](4))
+    assert(Tables.listingFp(dir.toString) != fp)
+  }
 }

@@ -5,6 +5,26 @@ import graft.SparkSpec
 
 class GraphSpec extends AnyFunSuite with SparkSpec {
 
+  /** The collected p75-strong undirected trade graph as adjacency sets. */
+  private def strongAdj(): Map[String, Set[String]] =
+    Graph.strongUndirected(spark, sfDir).collect()
+      .map(r => (r.getString(0), r.getString(1)))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+
+  /** Driver BFS: the hop distance from `root` to every node it reaches. */
+  private def driverBfs[T](adj: Map[T, Set[T]], root: T): Map[T, Long] = {
+    val dist = scala.collection.mutable.Map(root -> 0L)
+    var frontier = Set(root)
+    var h = 0L
+    while (frontier.nonEmpty) {
+      h += 1
+      frontier = frontier.flatMap(n => adj.getOrElse(n, Set.empty[T]))
+        .filterNot(dist.contains)
+      frontier.foreach(n => dist(n) = h)
+    }
+    dist.toMap
+  }
+
   test("pagerank: mass sums to ~1, floor respected, ranks match a driver-side recompute") {
     import spark.implicits._
     val rows = Graph.pagerankQ(spark, sfDir).collect()
@@ -295,22 +315,12 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(got.size == 25)
     assert(got(root) == 0L)
     // driver-side BFS over the SAME collected strong edge list
-    val adj = Graph.strongUndirected(spark, sfDir).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val adj = strongAdj()
     // the anchor is the max-degree node, smallest name on ties
     val expectedRoot = adj.toSeq.map { case (n, ns) => (-ns.size, n) }
       .min._2
     assert(root == expectedRoot)
-    val dist = scala.collection.mutable.Map(root -> 0L)
-    var frontier = Set(root)
-    var h = 0L
-    while (frontier.nonEmpty) {
-      h += 1
-      frontier = frontier.flatMap(n => adj.getOrElse(n, Set.empty))
-        .filterNot(dist.contains)
-      frontier.foreach(n => dist(n) = h)
-    }
+    val dist = driverBfs(adj, root)
     got.foreach { case (n, hop) =>
       assert(hop == dist.getOrElse(n, -1L), s"$n: $hop vs ${dist.get(n)}")
     }
@@ -563,7 +573,19 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val star = labelsOf(Graph.connectedComponentsStar(pairs))
-    val prop = labelsOf(graft.ops.Dedup.duplicateClusters(pairs))
+    // driver union-find over the collected pairs: each node's
+    // component min, the map min-label propagation converges to
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.collect().foreach { r =>
+      val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val prop = parent.keys.toSeq.map(n => n -> find(n)).toMap
+    assert(prop.nonEmpty && prop.exists { case (n, l) => n != l })
     assert(star == prop,
       "star CC must produce the identical (id → component-min) map")
   }
@@ -631,20 +653,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
   test("closeness: per-node closeness and harmonic match an all-sources driver BFS") {
     val rows = Graph.closenessQ(spark, sfDir).collect()
     assert(rows.length == 25)
-    val adj = Graph.strongUndirected(spark, sfDir).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val adj = strongAdj()
     rows.foreach { r =>
       val root = r.getAs[String]("node")
-      val dist = scala.collection.mutable.Map(root -> 0L)
-      var frontier = Set(root)
-      var h = 0L
-      while (frontier.nonEmpty) {
-        h += 1
-        frontier = frontier.flatMap(n => adj.getOrElse(n, Set.empty))
-          .filterNot(dist.contains)
-        frontier.foreach(n => dist(n) = h)
-      }
+      val dist = driverBfs(adj, root)
       assert(r.getAs[Long]("n_reach") == dist.size, s"$root reach")
       val sd = dist.values.filter(_ > 0).sum
       assert(r.getAs[Long]("sum_dist") == sd, s"$root sum_dist")
@@ -667,9 +679,7 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
   test("betweenness: sigma-product BC matches a driver all-pairs path count") {
     val rows = Graph.betweennessQ(spark, sfDir).collect()
     assert(rows.length == 25)
-    val adj = Graph.strongUndirected(spark, sfDir).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val adj = strongAdj()
     val nodes = rows.map(_.getAs[String]("node")).toSeq
     // driver reference: per-source BFS with shortest-path counting
     def bfsCount(root: String): (Map[String, Long], Map[String, Long]) = {
@@ -715,6 +725,66 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(rows.exists(_.getAs[Double]("betweenness") > 0.0))
   }
 
+  test("diameter: hop histogram and exact/90%-effective diameter match a driver BFS") {
+    val rows = Graph.diameterQ(spark, sfDir).collect()
+    val adj = strongAdj()
+    val nodes = graft.Tables.t(spark, sfDir, "nation").select("n_name")
+      .collect().map(_.getString(0))
+    // ordered (root, node) pairs at each finite hop > 0
+    val hist = nodes.toSeq.flatMap(driverBfs(adj, _).values.filter(_ > 0))
+      .groupBy(identity).view.mapValues(_.size.toLong).toSeq.sortBy(_._1)
+    assert(hist.nonEmpty, "the strong graph has at least one edge")
+    val total = hist.map(_._2).sum
+    val cum = hist.map(_._2).scanLeft(0L)(_ + _).tail
+    val diameter = hist.last._1
+    val eff = hist.zip(cum).collectFirst {
+      case ((h, _), c) if 10 * c >= 9 * total => h }.get
+    val expected = hist.zip(cum).map { case ((h, n), c) =>
+      (h, n, c, diameter, eff) }
+    val got = rows.toSeq.map(r => (r.getAs[Long]("hop"),
+      r.getAs[Long]("n_pairs"), r.getAs[Long]("cum_pairs"),
+      r.getAs[Long]("diameter"), r.getAs[Long]("eff_diameter_90")))
+    assert(got == expected)
+  }
+
+  test("hops kernel: all-roots and one-root hops equal a driver BFS on random graphs") {
+    import spark.implicits._
+    for (seed <- Seq(3, 17, 99)) {
+      val rnd = new scala.util.Random(seed)
+      // three components drawn inside the blocks [0,10), [10,20),
+      // [20,27); nodes 27..29 never get an edge, and a block node the
+      // draw misses is isolated too
+      val blocks = Seq(0 until 10, 10 until 20, 20 until 27)
+      val edges = blocks.flatMap { b =>
+        Seq.fill(10)((b(rnd.nextInt(b.size)).toLong,
+          b(rnd.nextInt(b.size)).toLong))
+      }.filter { case (a, b) => a != b }
+      val und = (edges ++ edges.map(_.swap)).distinct
+      val adj = und.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+      val ids = 0L until 30L
+      def expected(roots: Seq[Long]): Map[(Long, Long), Long] =
+        roots.flatMap { r =>
+          val d = driverBfs(adj, r)
+          ids.map(i => (r, i) -> d.getOrElse(i, Graph.unreached))
+        }.toMap
+      val undDf = und.toDF("src", "dst")
+      val nodes = ids.toDF("id")
+      def run(roots: Seq[Long]): Map[(Long, Long), Long] = {
+        val got = Graph.hops(undDf, nodes, roots.toDF("root"), s"spec $seed")
+          .select("root", "id", "hop").collect()
+        assert(got.length == roots.size * ids.size)
+        got.map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      }
+      val all = expected(ids)
+      assert(all.values.exists(_ == Graph.unreached) &&
+        all.values.exists(h => h > 1 && h < Graph.unreached),
+        s"seed $seed: the graph has both unreached pairs and multi-hop paths")
+      assert(run(ids) == all, s"seed $seed, every root")
+      val one = Seq(rnd.nextInt(27).toLong)
+      assert(run(one) == expected(one), s"seed $seed, root ${one.head}")
+    }
+  }
+
   test("mst: KSV filter-then-solve equals a driver Kruskal; spans all trading nations") {
     import spark.implicits._
     val got = Graph.mstQ(spark, sfDir).collect()
@@ -755,34 +825,6 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       if (p2(x) == x) x else { val r = f2(p2(x)); p2(x) = r; r }
     got.foreach { case (a, b, _) => p2(f2(a)) = f2(b) }
     assert(nodes.map(f2).toSet.size == 1, "single connected component")
-  }
-
-  test("ccStar: equals min-label propagation on the dedup pair graph") {
-    import spark.implicits._
-    val pairs = Dedup.PairArtifact.pairs(spark, sfDir)
-      .select($"doc_a".as("u"), $"doc_b".as("v"))
-    val (labels, rounds) = Graph.ccStar(pairs)
-    val got = labels.collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
-    val expected = Dedup.duplicateClusters(
-      Dedup.PairArtifact.pairs(spark, sfDir)).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
-    assert(got == expected, "star contraction must agree with label propagation")
-    assert(rounds >= 1)
-  }
-
-  test("ccStar: sub-diameter rounds on a 100-node chain that label propagation cannot finish") {
-    import spark.implicits._
-    // path graph 0-1-2-...-99: diameter 99. Min-label propagation moves
-    // the 0 label one hop per round (duplicateClusters' default budget of
-    // 20 rounds throws); star contraction collapses it in ~log n rounds.
-    val chain = (0L until 99L).map(i => (i, i + 1)).toDF("u", "v")
-    val (labels, rounds) = Graph.ccStar(chain)
-    val got = labels.collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
-    assert(got.size == 100)
-    assert(got.values.forall(_ == 0L), "one component rooted at 0")
-    assert(rounds <= 12, s"expected O(log n) rounds, got $rounds")
   }
 
   test("lpa: 3 synchronous rounds match a driver replay; sizes partition the nodes") {

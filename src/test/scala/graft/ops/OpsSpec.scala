@@ -90,14 +90,14 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(losers.forall(!kept.contains(_)))
   }
 
-  test("duplicateClusters groups non-clique topologies (chain, star) transitively") {
+  test("connectedComponentsStar groups non-clique topologies (chain, star) transitively") {
     import spark.implicits._
-    // chain 1-2-3-...-8 (diameter 7 — forces several propagation rounds),
+    // chain 1-2-3-...-8 (diameter 7 — forces several star rounds),
     // star 20-{21,22,23}, and the disjoint pair (30,31)
     val pairs = ((1L to 7L).map(i => (i, i + 1)) ++
       Seq((20L, 21L), (20L, 22L), (20L, 23L), (30L, 31L)))
       .toDF("doc_a", "doc_b")
-    val got = Dedup.duplicateClusters(pairs).collect()
+    val got = Graph.connectedComponentsStar(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     (1L to 8L).foreach(i => assert(got(i) == 1L, s"chain node $i"))
     Seq(20L, 21L, 22L, 23L).foreach(i => assert(got(i) == 20L))
@@ -105,11 +105,11 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(got.size == 14)
   }
 
-  test("duplicateClusters equals driver-side union-find on seeded random graphs") {
+  test("connectedComponentsStar equals driver-side union-find on seeded random graphs") {
     import spark.implicits._
-    // randomized oracle check for the Iterate.fixpoint loop: min-label
-    // propagation must agree with classic union-find on arbitrary
-    // topologies (seeded → reproducible failures)
+    // randomized oracle check for the star rounds: they must agree with
+    // classic union-find on arbitrary topologies (seeded → reproducible
+    // failures)
     for (seed <- Seq(7, 42, 1234)) {
       val rnd = new scala.util.Random(seed)
       val n = 40
@@ -129,16 +129,16 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       val expected = nodes.groupBy(find).flatMap { case (_, members) =>
         val m = members.min; members.map(_ -> m) }.toMap
-      val got = Dedup.duplicateClusters(edges.toDF("doc_a", "doc_b"))
+      val got = Graph.connectedComponentsStar(edges.toDF("doc_a", "doc_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"seed $seed: $got vs $expected")
     }
   }
 
-  test("duplicateClusters checkpointed rounds leave no storage-memory leak") {
+  test("connectedComponentsStar checkpointed rounds leave no storage-memory leak") {
     import spark.implicits._
     val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    Dedup.duplicateClusters(pairs).collect()
+    Graph.connectedComponentsStar(pairs).collect()
     spark.catalog.clearCache()
     // reliable checkpoint files live on disk in the checkpoint dir, not in
     // executor storage; after clearCache nothing may linger (localCheckpoint
@@ -146,11 +146,13 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
-  test("duplicateClusters fails loudly when maxIter is too small for the diameter") {
+  test("connectedComponentsStar fails loudly when maxIter is too small for its rounds") {
     import spark.implicits._
+    // one round cannot both contract an 8-node chain and see the edge
+    // set stay unchanged
     val deepChain = (1L to 7L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     intercept[IllegalStateException] {
-      Dedup.duplicateClusters(deepChain, maxIter = 2).collect()
+      Graph.connectedComponentsStar(deepChain, maxIter = 1).collect()
     }
   }
 

@@ -131,6 +131,14 @@ object HttpTableProvider {
         pageSizeParam = Option(o.get("page_size_param")).getOrElse(d.pageSizeParam))))
   }
 
+  /** `items` cut into at most defaultParallelism contiguous groups of
+    * equal size (the last may be shorter): the input partitions of the
+    * snapshot scan, the `fetch=executor` page ranges and a stream batch. */
+  private[connector] def contiguous[A](items: Seq[A]): Iterator[Seq[A]] = {
+    val parallelism = SparkSession.active.sparkContext.defaultParallelism
+    items.grouped(math.max(1, (items.length + parallelism - 1) / parallelism))
+  }
+
   /** The options `spark.read.json(Dataset[String])` builds, and so the
     * ones [[HttpTableProvider.inferSchema]] inferred the schema with.
     * Read from the active session's conf, so call it on the driver. */
@@ -161,7 +169,7 @@ object HttpTableProvider {
 
 /** An HTTP table: the driver-fetched snapshot (its pages), or
   * (`fetch=executor`) only the page range. The snapshot can also be read
-  * as a MICRO-BATCH stream that consumes one page per trigger (offsets
+  * as a MICRO-BATCH stream that consumes whole pages per trigger (offsets
   * ARE page numbers, so restart/recovery replays exactly the uncommitted
   * pages). */
 final class HttpTable(tableName: String, tableSchema: StructType,
@@ -241,19 +249,13 @@ final class HttpScan(snapshot: Option[Seq[Array[String]]], required: StructType,
     override def numRows(): java.util.OptionalLong = known(_.size.toLong)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // group size that cuts `count` items into ≤ defaultParallelism groups
-    val parallelism = SparkSession.active.sparkContext.defaultParallelism
-    def per(count: Int): Int = math.max(1, (count + parallelism - 1) / parallelism)
-    snapshot match {
-      case Some(pages) =>
-        pages.iterator.flatMap(_.iterator).grouped(per(pages.map(_.length).sum))
-          .map(g => HttpInputPartition(g.toArray): InputPartition).toArray
-      case None =>
-        val pages = p.startPage to p.endPage
-        pages.grouped(per(pages.length))
-          .map(r => HttpPageRangePartition(src, r.head, r.last): InputPartition).toArray
-    }
+  override def planInputPartitions(): Array[InputPartition] = snapshot match {
+    case Some(pages) =>
+      HttpTableProvider.contiguous(pages.flatten)
+        .map(g => HttpInputPartition(g.toArray): InputPartition).toArray
+    case None =>
+      HttpTableProvider.contiguous(p.startPage to p.endPage)
+        .map(r => HttpPageRangePartition(src, r.head, r.last): InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new HttpReaderFactory(required, HttpTableProvider.jsonOptions(), pushedFilters)
@@ -265,18 +267,14 @@ final case class HttpInputPartition(rows: Array[String]) extends InputPartition
 /** `fetch=executor` page range: metadata only, a few hundred bytes. */
 final case class HttpPageRangePartition(src: Source, fromPage: Int,
                                         toPage: Int) extends InputPartition {
-  /** The range's rows, fetched page by page on the executor. An empty
-    * page ends THIS range — within a contiguous range that matches the
-    * sequential loop's termination; ranges past a feed's end fetch their
-    * first page, see it empty, and finish. */
-  def lines(): Iterator[String] = {
-    val fetcher = new HttpFetcher()
-    val p = src.pagination.getOrElse(Pagination())
-    (fromPage to toPage).iterator
-      .map(fetcher.fetchPage(src.url, src.method, p, _))
-      .takeWhile(_.nonEmpty)
-      .flatten
-  }
+  /** The range's rows, fetched on the executor by the fetcher's page loop
+    * ([[HttpFetcher.fetchPageRange]]): page k decodes while the next pages
+    * are in flight. An empty page ends THIS range — within a contiguous
+    * range that matches the sequential loop's termination; a range past a
+    * feed's end sees its first page empty and finishes. */
+  def lines(): Iterator[String] =
+    new HttpFetcher().fetchPageRange(src.url, src.method,
+      src.pagination.getOrElse(Pagination()), fromPage, toPage).flatten
 }
 
 /** The one reader factory of the snapshot, `fetch=executor` and stream
@@ -308,9 +306,10 @@ final case class HttpPageOffset(page: Int) extends Offset {
 }
 
 /** Micro-batch stream over a paginated HTTP source: each trigger probes
-  * forward from the last known page; every contiguous non-empty page
-  * becomes one input partition of the batch. The reference's bounded
-  * pagination loop (datasources.rs:119-161) becomes an INCREMENTAL
+  * forward from the last known page; the batch's pages are cut into at
+  * most defaultParallelism contiguous input partitions, in page order.
+  * The reference's bounded pagination loop (datasources.rs:119-161)
+  * becomes an INCREMENTAL
   * source — "tail -f" a growing API — with the same termination rule
   * (empty/null page = caught up, not an error; `end_page` = hard stop).
   *
@@ -365,8 +364,8 @@ final class HttpMicroBatchStream(src: Source, required: StructType,
       : Array[InputPartition] = {
     val s = start.asInstanceOf[HttpPageOffset].page
     val e = end.asInstanceOf[HttpPageOffset].page
-    ((s + 1) to e).map(pg => HttpInputPartition(pageRows(pg)): InputPartition)
-      .toArray
+    HttpTableProvider.contiguous((s + 1) to e)
+      .map(g => HttpInputPartition(g.flatMap(pageRows).toArray): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

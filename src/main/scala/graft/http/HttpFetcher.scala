@@ -6,6 +6,7 @@ import graft.config.{Pagination, Source}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.{Callable, ExecutionException, Future, LinkedBlockingQueue, ThreadFactory, ThreadPoolExecutor, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 /** HTTP request executor + pagination (reference: `data_extraction` at
@@ -29,9 +30,18 @@ import scala.jdk.CollectionConverters._
   *     implementing the intent of the dead `data_extraction_from_source`
   *     (datasources.rs:286-316) instead of a hard-coded `?page=`.
   *
+  * Pages are requested through a bounded in-order window: up to four page
+  * requests are in flight at once, on daemon threads of the call, and the
+  * pages are consumed in page order. The result is the sequential loop's:
+  * it stops at the first null or empty page or at `end_page`, never
+  * requests past `end_page`, requests at most three pages past the
+  * terminating page, and raises a page's error only when the sequential
+  * loop would have reached that page. Retries and backoff stay per
+  * request ([[fetchJson]]).
+  *
   * This runs on the DRIVER at registration time (same as the reference's
-  * eager fetch, dataframe.rs:14-21): the snapshot is then parallelized
-  * into a DataFrame, so a 1000-executor cluster still only fetches once.
+  * eager fetch, dataframe.rs:14-21), and on executors for the connector's
+  * `fetch=executor` page ranges.
   */
 class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
                   maxRetries: Int = 2,
@@ -104,17 +114,66 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
   def fetchPaginated(url: String, method: String, p: Pagination): Seq[String] =
     pages(url, method, p).flatten
 
-  private def pages(url: String, method: String, p: Pagination): Seq[Seq[String]] = {
-    val pages = Seq.newBuilder[Seq[String]]
-    var page = p.startPage
-    var done = false
-    while (!done && page <= p.endPage) {
-      val node = fetchJson(pageUrl(url, p, page), method)
-      val pageRows = toRows(node)
-      if (node.isNull || pageRows.isEmpty) done = true  // null OR empty terminates
-      else { pages += pageRows; page += 1 }
+  private def pages(url: String, method: String, p: Pagination): Seq[Seq[String]] =
+    fetchPageRange(url, method, p, p.startPage, p.endPage).toList
+
+  /** Pages `from..to` in page order, before the first null or empty one,
+    * fetched through the in-order window (see the class doc) as the
+    * iterator is read: while the caller reads page k, pages k+1..k+3 are
+    * in flight. When the loop ends, requests not yet sent are cancelled
+    * and those in flight finish on their own threads. The window's
+    * threads are daemons that end once idle for a second, so an iterator
+    * left unread releases them too. */
+  def fetchPageRange(url: String, method: String, p: Pagination,
+                     from: Int, to: Int): Iterator[Seq[String]] = {
+    val last = to.toLong
+    new Iterator[Seq[String]] {
+      private val pool = new ThreadPoolExecutor(HttpFetcher.Window, HttpFetcher.Window,
+        1L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), HttpFetcher.daemons)
+      pool.allowCoreThreadTimeOut(true)
+      private val inflight = scala.collection.mutable.Queue.empty[Future[Seq[String]]]
+      private var unrequested = from.toLong
+      private var ready: Seq[String] = null
+
+      private def submit(): Unit = if (unrequested <= last) {
+        val page = unrequested.toInt
+        inflight.enqueue(pool.submit(new Callable[Seq[String]] {
+          override def call(): Seq[String] = fetchPage(url, method, p, page)
+        }))
+        unrequested += 1
+      }
+      (1 to HttpFetcher.Window).foreach(_ => submit())
+
+      private def stop(): Unit = {
+        inflight.foreach(_.cancel(false))
+        inflight.clear()
+        unrequested = last + 1
+        pool.shutdown()
+      }
+
+      override def hasNext: Boolean = {
+        if (ready == null && inflight.nonEmpty) {
+          val rows =
+            try inflight.dequeue().get()
+            catch {
+              case e: Throwable =>
+                stop()
+                throw (e match { case x: ExecutionException => x.getCause; case _ => e })
+            }
+          if (rows.isEmpty) stop() // null OR empty terminates
+          else { ready = rows; submit() }
+        }
+        if (ready == null) pool.shutdown()
+        ready != null
+      }
+
+      override def next(): Seq[String] = {
+        if (!hasNext) throw new NoSuchElementException("no page after the last one")
+        val rows = ready
+        ready = null
+        rows
+      }
     }
-    pages.result()
   }
 
   /** One page's rows (the unit the streaming source consumes per
@@ -132,5 +191,16 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
       java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
     val sep = if (url.contains('?')) '&' else '?'
     s"$url$sep${enc(p.pageParam)}=$page&${enc(p.pageSizeParam)}=${p.pageSize}"
+  }
+}
+
+object HttpFetcher {
+  /** Page requests the page loop keeps in flight. */
+  private val Window = 4
+
+  private val daemons: ThreadFactory = r => {
+    val t = new Thread(r, "graft-http-page")
+    t.setDaemon(true)
+    t
   }
 }

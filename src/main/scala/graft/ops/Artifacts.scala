@@ -29,10 +29,11 @@ import org.apache.spark.sql.SparkSession
 private[ops] object Artifacts {
 
   /** Content-pinned, filesystem-safe artifact key for an artifact
-    * derived from ONE source table of the corpus dir. */
+    * derived from ONE source table of the corpus dir. It never starts
+    * with `_` or `.`: Spark treats such paths as hidden and ignores them. */
   def tableKey(s: SparkSession, dir: String, table: String): String = {
     val safe = s"${dir}_$table".replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${safe}_d${tableDigest(s, dir, table)}"
+    s"${safe}_d${tableDigest(s, dir, table)}".dropWhile(c => c == '_' || c == '.')
   }
 
   // (dir, table, listing fingerprint) → content digest. The listing

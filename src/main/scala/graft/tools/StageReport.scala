@@ -44,12 +44,12 @@ final class StageReport private () extends SparkListener {
   }
 
   override def onJobStart(j: SparkListenerJobStart): Unit =
-    jobs.put(j.jobId, (Option(j.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description"))
-        .orElse(Option(p.getProperty("callSite.short"))))
-      .getOrElse("?").take(90), j.time))
+    jobs.put(j.jobId, (StageReport.label(j).take(90), j.time))
 
   override def onJobEnd(j: SparkListenerJobEnd): Unit = jobEnd.put(j.jobId, j.time)
+
+  /** The labels of the jobs started since the last [[clear]], by job id. */
+  def jobLabels: Seq[String] = jobs.asScala.toSeq.sortBy(_._1).map(_._2._1)
 
   /** Task spill bytes since the last [[clear]]. */
   def spillBytes: Long = spill.get()
@@ -76,6 +76,20 @@ final class StageReport private () extends SparkListener {
 object StageReport {
   private final case class Stage(wallMs: Long, tasks: Int, shuffleRead: Long,
                                  shuffleWrite: Long, ops: String)
+
+  /** A job's label: its description or `setCallSite` call site when a
+    * caller set one; else its result stage's name, which is Spark's short
+    * call site of the job ("collect at X.scala:12"), after `sql <id>:`
+    * when the job runs for a SQL execution. */
+  private def label(j: SparkListenerJobStart): String = {
+    val props = Option(j.properties)
+    def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+    prop("spark.job.description").orElse(prop("callSite.short")).getOrElse {
+      // the result stage is created after its parents: the highest id
+      val site = j.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
+      prop("spark.sql.execution.id").fold(site)(id => s"sql $id: $site")
+    }
+  }
 
   /** A report listening on `spark`'s context from now on. */
   def install(spark: SparkSession): StageReport = {

@@ -357,6 +357,20 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a micro-batch of 10 pages is at most defaultParallelism partitions, rows in page order") {
+    val hits = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    StubServer.withServer(pagedRoutes(10, hits)) { srv =>
+      val src = HttpTableProvider.toSource(new CaseInsensitiveStringMap(Map(
+        "url" -> srv.url("/docs"), "start_page" -> "1", "end_page" -> "10").asJava))
+      val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, pg BIGINT")
+      val stream = new HttpMicroBatchStream(src, schema)
+      val parts = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
+      assert(parts.length <= spark.sparkContext.defaultParallelism)
+      val rows = parts.toSeq.flatMap(_.asInstanceOf[HttpInputPartition].rows)
+      assert(rows == (1 to 20).map(id => s"""{"id":$id,"pg":${(id + 1) / 2}}"""))
+    }
+  }
+
   test("readStream fetches each snapshot page once: the stream starts from the load's pages") {
     val hits = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     StubServer.withServer(pagedRoutes(3, hits)) { srv =>

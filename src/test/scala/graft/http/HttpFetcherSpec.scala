@@ -3,6 +3,7 @@ package graft.http
 import graft.GraftError.HttpError
 import graft.config.{Pagination, Source}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** HTTP executor + pagination semantics — reference behaviors from
   * /root/reference/src/datasources.rs:110-268 with the documented
@@ -124,5 +125,99 @@ class HttpFetcherSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("500"))
     }
+  }
+
+  // ---- the in-order page window ----
+
+  private def pageOf(q: String): Int =
+    q.split('&').collectFirst { case kv if kv.startsWith("page=") => kv.drop(5).toInt }.get
+
+  /** Pages 1..n of one row each, then `term`; `fail` pages answer 500;
+    * responses are delayed a page-dependent few ms, so they complete out
+    * of page order. */
+  private def feed(n: Int, term: String = "[]", fail: Int => Boolean = _ => false)
+      : PartialFunction[(String, String, String), (Int, String)] = {
+    case (_, "/w", q) =>
+      val page = pageOf(q)
+      Thread.sleep((page * 7 % 5) * 4L)
+      if (fail(page)) (500, """{"err":"down"}""")
+      else if (page <= n) (200, s"""[{"page":$page}]""")
+      else (200, term)
+  }
+
+  /** Pages the stub was asked for, once any request still in flight
+    * when the loop returned has arrived. */
+  private def requested(s: StubServer): Seq[Int] = {
+    Thread.sleep(200)
+    s.requests.asScala.toSeq.map(r => pageOf(r.query))
+  }
+
+  /** The window's threads are daemons and all end soon after the loop
+    * returns, whether it finished, stopped early or failed. */
+  private def assertWindowThreadsReleased(): Unit = {
+    def window = Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "graft-http-page")
+    assert(window.forall(_.isDaemon), "window threads must be daemons")
+    val deadline = System.nanoTime() + 5000000000L
+    while (window.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(window.isEmpty, s"window threads still alive: $window")
+  }
+
+  private def rowsOf(pages: Range): Seq[String] = pages.map(p => s"""{"page":$p}""")
+
+  test("page window: rows come back in page order with at most 4 requests in flight") {
+    StubServer.withServer(feed(20), threads = 8) { s =>
+      val rows = fetcher.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = 50))
+      assert(rows == rowsOf(1 to 20))
+      assert(s.peakInflight <= 4, s"peak in flight ${s.peakInflight}")
+      assert(s.peakInflight > 1, "pages must be requested concurrently")
+      assertWindowThreadsReleased()
+    }
+  }
+
+  test("page window never requests past end_page") {
+    for (end <- Seq(2, 6)) StubServer.withServer(feed(100), threads = 8) { s =>
+      val rows = fetcher.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = end))
+      assert(rows == rowsOf(1 to end))
+      assert(requested(s).sorted == (1 to end), s"end_page $end")
+    }
+    assertWindowThreadsReleased()
+  }
+
+  test("page window makes at most 3 requests past a null or [] page") {
+    for (term <- Seq("[]", "null")) StubServer.withServer(feed(5, term), threads = 8) { s =>
+      val rows = fetcher.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = 100))
+      assert(rows == rowsOf(1 to 5), term)
+      val past = requested(s).filter(_ > 6)
+      assert(past.size <= 3 && past.distinct == past, s"$term: requested past page 6: $past")
+    }
+    assertWindowThreadsReleased()
+  }
+
+  test("page window: a 500 past the terminator raises nothing, a 500 before it raises after its retries") {
+    val retrying = new HttpFetcher(maxRetries = 1, backoffMillis = 1L)
+    StubServer.withServer(feed(3, fail = _ == 5), threads = 8) { s =>
+      val rows = retrying.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = 10))
+      assert(rows == rowsOf(1 to 3))
+    }
+    StubServer.withServer(feed(6, fail = _ == 2), threads = 8) { s =>
+      val e = intercept[HttpError] {
+        retrying.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = 10))
+      }
+      assert(e.status == 500)
+      assert(requested(s).count(_ == 2) == 2, "one request and one retry of page 2")
+    }
+    assertWindowThreadsReleased()
+  }
+
+  test("page window: POST pages keep their method, body and content type") {
+    StubServer.withServer(feed(3), threads = 8) { s =>
+      val rows = fetcher.fetchRows(Source("posted", s.url("/w"), method = "POST",
+        pagination = Some(Pagination(endPage = 10))))
+      assert(rows == rowsOf(1 to 3))
+      val reqs = s.requests.asScala.toSeq
+      assert(reqs.nonEmpty && reqs.forall(r => r.method == "POST" &&
+        r.contentType.contains("application/json") && r.body.isEmpty), reqs)
+    }
+    assertWindowThreadsReleased()
   }
 }

@@ -64,4 +64,17 @@ class ArtifactsSpec extends AnyFunSuite with SparkSpec {
     assert(m.nonEmpty && m.head.getAs[Double]("jaccard") == 1.0,
       "rebuilt index must reflect the mutated corpus")
   }
+
+  test("artifact keys are never hidden paths; the pair artifact round-trips") {
+    // a corpus under an absolute path: the key used to start with `_`
+    val dir = java.nio.file.Files.createTempDirectory("graft-artspec-").toString
+    writeDocs(dir, salt = "k")
+    val key = Artifacts.tableKey(spark, dir, "documents")
+    assert(!key.startsWith("_") && !key.startsWith("."), key)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val live = pairs(Dedup.near(spark, dir))
+    assert(live.nonEmpty, "duplicate docs must pair")
+    assert(pairs(Dedup.PairArtifact.pairs(spark, dir)) == live)
+  }
 }

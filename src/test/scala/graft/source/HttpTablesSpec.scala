@@ -4,12 +4,16 @@ import graft.GraftError.EmptyResultError
 import graft.SparkSpec
 import graft.config.{Pagination, Source}
 import graft.http.StubServer
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end register→SQL over the in-process stub server — the E1/E2
   * lifecycle of the reference (/root/reference/src/main.rs:22-49,
   * dataframe.rs:7-24) rebuilt on SparkSession + temp views. */
-class HttpTablesSpec extends AnyFunSuite with SparkSpec {
+class HttpTablesSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHelper {
 
   private val posts =
     """[{"userId":1,"id":1,"title":"a","body":"x"},
@@ -72,6 +76,63 @@ class HttpTablesSpec extends AnyFunSuite with SparkSpec {
       // ADVICE r2: hits==1 alone can't fail (rows are parallelized from
       // driver memory) — assert the cache itself so re-decode is covered.
       assert(df.storageLevel.useMemory, "decoded snapshot must be cached")
+    }
+  }
+
+  // ---- snapshot sizing: one partition when small ----
+
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+
+  /** `n` rows of about 130 bytes of JSON each. */
+  private def rows(n: Int): String = (1 to n).map(i =>
+    s"""{"id":$i,"k":${i % 7},"v":${i * 3},"pad":"${"p" * 90}"}""").mkString("[", ",", "]")
+
+  test("a small snapshot is one partition: group by, window and self-join plan no shuffle") {
+    StubServer.withServer({ case ("GET", "/small", _) => (200, rows(2000)) }) { s =>
+      val df = HttpTables.register(spark, Source("small", s.url("/small")))
+      try {
+        assert(df.queryExecution.executedPlan.outputPartitioning == SinglePartition)
+        // materialize the cache: its size then lets the join broadcast
+        assert(df.count() == 2000L)
+        val grouped = spark.sql("SELECT k, count(*) AS n, sum(v) AS t FROM small GROUP BY k")
+        val window = spark.sql("""SELECT count(*) FROM (SELECT id,
+          |ROW_NUMBER() OVER (PARTITION BY k ORDER BY v DESC) AS rn FROM small) WHERE rn = 1""".stripMargin)
+        val joined = spark.sql("SELECT count(*) FROM small a JOIN small b ON a.id = b.k")
+        for (q <- Seq(grouped, window, joined))
+          assert(shuffles(q).isEmpty, q.queryExecution.executedPlan)
+        assert(grouped.collect().map(_.getLong(1)).sum == 2000L)
+        assert(window.head().getLong(0) == 7L)
+        assert(joined.head().getLong(0) == 2000L - 2000 / 7) // rows with k >= 1
+      } finally df.unpersist()
+    }
+  }
+
+  test("a snapshot above the JSON split size keeps more than one partition") {
+    StubServer.withServer({ case ("GET", "/big", _) => (200, rows(45000)) }) { s =>
+      val df = HttpTables.load(spark, Source("big", s.url("/big")))
+      try {
+        assert(df.queryExecution.executedPlan.outputPartitioning != SinglePartition)
+        assert(df.rdd.getNumPartitions > 1)
+        assert(df.count() == 45000L)
+      } finally df.unpersist()
+    }
+  }
+
+  test("a one-partition snapshot joined to a 4-partition table shuffles neither side to one partition") {
+    import spark.implicits._
+    StubServer.withServer({ case ("GET", "/dim", _) => (200, rows(50)) }) { s =>
+      val dim = HttpTables.load(spark, Source("dim", s.url("/dim")))
+      try {
+        val fact = spark.range(0, 10000, 1, 4).select(($"id" % 100).as("id"))
+        val joined = fact.hint("merge").join(dim, "id")
+        val exchanges = shuffles(joined)
+        assert(exchanges.nonEmpty && exchanges.forall(e =>
+          e.outputPartitioning != SinglePartition &&
+            e.outputPartitioning.numPartitions == spark.sessionState.conf.numShufflePartitions),
+          joined.queryExecution.executedPlan)
+        assert(joined.count() == 50L * 100) // dim ids 1..50, each 100 times in fact
+      } finally dim.unpersist()
     }
   }
 }

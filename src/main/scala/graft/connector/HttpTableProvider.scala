@@ -268,13 +268,15 @@ final case class HttpInputPartition(rows: Array[String]) extends InputPartition
 final case class HttpPageRangePartition(src: Source, fromPage: Int,
                                         toPage: Int) extends InputPartition {
   /** The range's rows, fetched on the executor by the fetcher's page loop
-    * ([[HttpFetcher.fetchPageRange]]): page k decodes while the next pages
-    * are in flight. An empty page ends THIS range — within a contiguous
-    * range that matches the sequential loop's termination; a range past a
-    * feed's end sees its first page empty and finishes. */
+    * ([[HttpFetcher.fetchPageRange]]) one request at a time: the ranges
+    * already run in parallel, so a wider window would multiply the
+    * requests in flight against the API. An empty page ends THIS range —
+    * within a contiguous range that matches the sequential loop's
+    * termination; a range past a feed's end sees its first page empty and
+    * finishes after that one request. */
   def lines(): Iterator[String] =
     new HttpFetcher().fetchPageRange(src.url, src.method,
-      src.pagination.getOrElse(Pagination()), fromPage, toPage).flatten
+      src.pagination.getOrElse(Pagination()), fromPage, toPage, window = 1).flatten
 }
 
 /** The one reader factory of the snapshot, `fetch=executor` and stream

@@ -30,14 +30,16 @@ import scala.jdk.CollectionConverters._
   *     implementing the intent of the dead `data_extraction_from_source`
   *     (datasources.rs:286-316) instead of a hard-coded `?page=`.
   *
-  * Pages are requested through a bounded in-order window: up to four page
-  * requests are in flight at once, on daemon threads of the call, and the
-  * pages are consumed in page order. The result is the sequential loop's:
-  * it stops at the first null or empty page or at `end_page`, never
-  * requests past `end_page`, requests at most three pages past the
-  * terminating page, and raises a page's error only when the sequential
-  * loop would have reached that page. Retries and backoff stay per
-  * request ([[fetchJson]]).
+  * Pages are requested through a bounded in-order window: on the driver
+  * up to four page requests are in flight at once, on daemon threads of
+  * the call, and the pages are consumed in page order. The result is the
+  * sequential loop's: it stops at the first null or empty page or at
+  * `end_page`, never requests past `end_page`, requests at most three
+  * pages past the terminating page, and raises a page's error only when
+  * the sequential loop would have reached that page. Retries and backoff
+  * stay per request ([[fetchJson]]). A `fetch=executor` page range runs
+  * the same loop one request at a time: its ranges already run in
+  * parallel.
   *
   * This runs on the DRIVER at registration time (same as the reference's
   * eager fetch, dataframe.rs:14-21), and on executors for the connector's
@@ -115,20 +117,21 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
     pages(url, method, p).flatten
 
   private def pages(url: String, method: String, p: Pagination): Seq[Seq[String]] =
-    fetchPageRange(url, method, p, p.startPage, p.endPage).toList
+    fetchPageRange(url, method, p, p.startPage, p.endPage, HttpFetcher.Window).toList
 
   /** Pages `from..to` in page order, before the first null or empty one,
-    * fetched through the in-order window (see the class doc) as the
-    * iterator is read: while the caller reads page k, pages k+1..k+3 are
-    * in flight. When the loop ends, requests not yet sent are cancelled
-    * and those in flight finish on their own threads. The window's
-    * threads are daemons that end once idle for a second, so an iterator
-    * left unread releases them too. */
+    * fetched through an in-order window of `window` requests (see the
+    * class doc) as the iterator is read: while the caller reads page k,
+    * pages k+1..k+window-1 are in flight, and at most window-1 requests go
+    * past the terminating page. When the loop ends, requests not yet sent
+    * are cancelled and those in flight finish on their own threads. The
+    * window's threads are daemons that end once idle for a second, so an
+    * iterator left unread releases them too. */
   def fetchPageRange(url: String, method: String, p: Pagination,
-                     from: Int, to: Int): Iterator[Seq[String]] = {
-    val last = to.toLong
+                     from: Int, to: Int, window: Int): Iterator[Seq[String]] = {
+    val last = to.toLong // Long: `to` may be Int.MaxValue
     new Iterator[Seq[String]] {
-      private val pool = new ThreadPoolExecutor(HttpFetcher.Window, HttpFetcher.Window,
+      private val pool = new ThreadPoolExecutor(window, window,
         1L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), HttpFetcher.daemons)
       pool.allowCoreThreadTimeOut(true)
       private val inflight = scala.collection.mutable.Queue.empty[Future[Seq[String]]]
@@ -142,12 +145,11 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
         }))
         unrequested += 1
       }
-      (1 to HttpFetcher.Window).foreach(_ => submit())
+      (1 to window).foreach(_ => submit())
 
       private def stop(): Unit = {
         inflight.foreach(_.cancel(false))
         inflight.clear()
-        unrequested = last + 1
         pool.shutdown()
       }
 
@@ -160,10 +162,10 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
                 stop()
                 throw (e match { case x: ExecutionException => x.getCause; case _ => e })
             }
-          if (rows.isEmpty) stop() // null OR empty terminates
-          else { ready = rows; submit() }
+          if (rows.nonEmpty) { ready = rows; submit() }
+          // a null or empty page, or end_page, ends the loop
+          if (rows.isEmpty || inflight.isEmpty) stop()
         }
-        if (ready == null) pool.shutdown()
         ready != null
       }
 
@@ -195,7 +197,7 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
 }
 
 object HttpFetcher {
-  /** Page requests the page loop keeps in flight. */
+  /** Page requests the driver's page loop keeps in flight. */
   private val Window = 4
 
   private val daemons: ThreadFactory = r => {

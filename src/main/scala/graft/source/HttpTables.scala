@@ -31,28 +31,26 @@ object HttpTables {
     df
   }
 
-  /** Load without registering. The snapshot is sized like a JSON file
-    * split (Spark's `FilePartition.maxSplitBytes` rule, from the session's
-    * `spark.sql.files.maxPartitionBytes` and `openCostInBytes`), and is one
-    * partition when small: then the cached plan reports `SinglePartition`,
-    * so aggregates, windows and joins over it plan no exchange (the
-    * reference pins `UnknownPartitioning(1)` — execution.rs:95). */
+  /** Load without registering. A snapshot of at most
+    * `spark.sql.files.openCostInBytes` of JSON (4 MB by default: Spark
+    * reads a JSON file that small as one split), or any snapshot when
+    * defaultParallelism is 1, is cached as one partition: its cached plan
+    * then reports `SinglePartition`, so aggregates, windows and joins over
+    * it plan no exchange (the reference pins `UnknownPartitioning(1)` —
+    * execution.rs:95). A larger one is parallelized across the default
+    * parallelism. */
   def load(spark: SparkSession, source: Source,
            fetcher: HttpFetcher = new HttpFetcher()): DataFrame = {
     import spark.implicits._
     val rows = fetcher.fetchRows(source)
     if (rows.isEmpty) throw EmptyResultError(source.url)
-    val slices = math.min(rows.size, splits(spark, rows.iterator.map(_.length.toLong).sum))
-    val df = spark.read.json(spark.createDataset(spark.sparkContext.parallelize(rows, slices)))
+    val parallelism = spark.sparkContext.defaultParallelism
+    val small = parallelism == 1 ||
+      rows.iterator.map(_.length.toLong).sum <= spark.sessionState.conf.filesOpenCostInBytes
+    val slices = if (small) 1 else math.min(rows.size, parallelism)
+    val lines = spark.createDataset(spark.sparkContext.parallelize(rows, slices))
+    val df = spark.read.json(lines)
     // coalesce, not repartition: a narrow one-partition plan, no shuffle
-    (if (slices == 1) df.coalesce(1) else df).cache()
-  }
-
-  /** Splits of `bytes` of JSON text, cut as Spark cuts a JSON file. */
-  private def splits(spark: SparkSession, bytes: Long): Int = {
-    val conf = spark.sessionState.conf
-    val maxSplit = math.min(conf.filesMaxPartitionBytes, math.max(conf.filesOpenCostInBytes,
-      bytes / spark.sparkContext.defaultParallelism))
-    math.max(1L, (bytes + maxSplit - 1) / maxSplit).toInt
+    (if (small) df.coalesce(1) else df).cache()
   }
 }

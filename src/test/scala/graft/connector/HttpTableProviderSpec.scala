@@ -427,6 +427,28 @@ class HttpTableProviderSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("fetch=executor ranges request one page at a time: one request per range past the feed's end") {
+    val hits = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    StubServer.withServer(pagedRoutes(3, hits), threads = 8) { srv =>
+      val df = spark.read.format("http")
+        .option("url", srv.url("/docs"))
+        .option("fetch", "executor")
+        .option("start_page", "1").option("end_page", "10")
+        .load()
+      val parts = scanOf(df).planInputPartitions()
+        .map(_.asInstanceOf[HttpPageRangePartition])
+      assert(df.count() == 6L)
+      // each range reads its pages up to the feed's last page (3), plus
+      // the one empty page that ends it when the range reaches past 3
+      val perRange = parts.map(r =>
+        (r.fromPage to math.min(r.toPage, 3)).size + (if (r.toPage > 3) 1 else 0))
+      // + 1: the driver's page-1 request for schema inference
+      assert(hits.values.asScala.map(_.intValue).sum == perRange.sum + 1,
+        s"ranges ${parts.map(r => s"${r.fromPage}-${r.toPage}").mkString(",")}: $hits")
+      assert(srv.peakInflight <= parts.length, s"peak in flight ${srv.peakInflight}")
+    }
+  }
+
   test("fetch=executor applies pushed filters and pruning at executor decode") {
     val hits = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     StubServer.withServer(pagedRoutes(3, hits)) { srv =>

@@ -84,7 +84,8 @@ class HttpTablesSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHe
   private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
     collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
 
-  /** `n` rows of about 130 bytes of JSON each. */
+  /** `n` rows of about 130 bytes of JSON each: 45,000 rows pass the
+    * default 4 MB `spark.sql.files.openCostInBytes`. */
   private def rows(n: Int): String = (1 to n).map(i =>
     s"""{"id":$i,"k":${i % 7},"v":${i * 3},"pad":"${"p" * 90}"}""").mkString("[", ",", "]")
 
@@ -108,7 +109,7 @@ class HttpTablesSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHe
     }
   }
 
-  test("a snapshot above the JSON split size keeps more than one partition") {
+  test("a snapshot above spark.sql.files.openCostInBytes keeps more than one partition") {
     StubServer.withServer({ case ("GET", "/big", _) => (200, rows(45000)) }) { s =>
       val df = HttpTables.load(spark, Source("big", s.url("/big")))
       try {

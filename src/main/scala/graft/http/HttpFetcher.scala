@@ -110,14 +110,9 @@ class HttpFetcher(timeout: Duration = Duration.ofSeconds(30),
     * empty one, up to `end_page`. */
   def fetchPages(source: Source): Seq[Seq[String]] = source.pagination match {
     case None => Seq(toRows(fetchJson(source.url, source.method)))
-    case Some(p) => pages(source.url, source.method, p)
+    case Some(p) =>
+      fetchPageRange(source.url, source.method, p, p.startPage, p.endPage, HttpFetcher.Window).toList
   }
-
-  def fetchPaginated(url: String, method: String, p: Pagination): Seq[String] =
-    pages(url, method, p).flatten
-
-  private def pages(url: String, method: String, p: Pagination): Seq[Seq[String]] =
-    fetchPageRange(url, method, p, p.startPage, p.endPage, HttpFetcher.Window).toList
 
   /** Pages `from..to` in page order, before the first null or empty one,
     * fetched through an in-order window of `window` requests (see the

@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The session factory's conf, which Verify's oracle results and Bench's
-  * codegen-cache behaviour depend on; the checkpoint-dir helper; and a
-  * source guard that keeps sessions and checkpoint dirs made in one
-  * place each. */
+  * codegen-cache behaviour depend on; the checkpoint-dir helper; and
+  * source guards that keep sessions, checkpoint dirs and JSON schema
+  * inference and decode made in one place each. */
 class SessionSpec extends AnyFunSuite with SparkSpec {
 
   test("factory conf: local[cpus], a shuffle partition per core, UTC, nanos, no UI, codegen cache") {
@@ -58,5 +58,10 @@ class SessionSpec extends AnyFunSuite with SparkSpec {
 
   test("checkpoint dirs are set only in graft/Session.scala") {
     assert(usesOutside("setCheckpointDir(", Set("graft/Session.scala")).isEmpty)
+  }
+
+  test("JSON is inferred and decoded only in graft/connector/HttpTableProvider.scala") {
+    for (needle <- Seq("spark.read.json(", "new JacksonParser("))
+      assert(usesOutside(needle, Set("graft/connector/HttpTableProvider.scala")).isEmpty, needle)
   }
 }

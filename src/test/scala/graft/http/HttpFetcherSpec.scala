@@ -11,6 +11,10 @@ import scala.jdk.CollectionConverters._
 class HttpFetcherSpec extends AnyFunSuite {
   private val fetcher = new HttpFetcher()
 
+  /** The paginated snapshot of `url` under `p`, as `HttpTables` fetches it. */
+  private def paged(f: HttpFetcher, url: String, p: Pagination): Seq[String] =
+    f.fetchRows(Source("paged", url, pagination = Some(p)))
+
   test("GET array response flattens to one row per element") {
     StubServer.withServer({
       case ("GET", "/posts", _) => (200, """[{"id":1,"t":"a"},{"id":2,"t":"b"}]""")
@@ -64,7 +68,7 @@ class HttpFetcherSpec extends AnyFunSuite {
     }) { s =>
       val p = Pagination(startPage = 1, endPage = 10, pageSize = 2,
         pageParam = "p", pageSizeParam = "per_page")
-      val rows = fetcher.fetchPaginated(s.url("/items"), "GET", p)
+      val rows = paged(fetcher, s.url("/items"), p)
       assert(rows.size == 6) // 3 pages × 2 rows; stops at the null page
     }
   }
@@ -75,7 +79,7 @@ class HttpFetcherSpec extends AnyFunSuite {
         val page = q.split("&")(0).stripPrefix("page=").toInt
         if (page <= 2) (200, s"""[{"p":$page}]""") else (200, "[]")
     }) { s =>
-      val rows = fetcher.fetchPaginated(s.url("/e"), "GET", Pagination())
+      val rows = paged(fetcher, s.url("/e"), Pagination())
       assert(rows.size == 2)
     }
   }
@@ -84,7 +88,7 @@ class HttpFetcherSpec extends AnyFunSuite {
     StubServer.withServer({
       case ("GET", "/inf", _) => (200, """[{"x":1}]""")
     }) { s =>
-      val rows = fetcher.fetchPaginated(s.url("/inf"), "GET", Pagination(endPage = 4))
+      val rows = paged(fetcher, s.url("/inf"), Pagination(endPage = 4))
       assert(rows.size == 4)
     }
   }
@@ -166,7 +170,7 @@ class HttpFetcherSpec extends AnyFunSuite {
 
   test("page window: rows come back in page order with at most 4 requests in flight") {
     StubServer.withServer(feed(20), threads = 8) { s =>
-      val rows = fetcher.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = 50))
+      val rows = paged(fetcher, s.url("/w"), Pagination(endPage = 50))
       assert(rows == rowsOf(1 to 20))
       assert(s.peakInflight <= 4, s"peak in flight ${s.peakInflight}")
       assert(s.peakInflight > 1, "pages must be requested concurrently")
@@ -176,7 +180,7 @@ class HttpFetcherSpec extends AnyFunSuite {
 
   test("page window never requests past end_page") {
     for (end <- Seq(2, 6)) StubServer.withServer(feed(100), threads = 8) { s =>
-      val rows = fetcher.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = end))
+      val rows = paged(fetcher, s.url("/w"), Pagination(endPage = end))
       assert(rows == rowsOf(1 to end))
       assert(requested(s).sorted == (1 to end), s"end_page $end")
     }
@@ -185,7 +189,7 @@ class HttpFetcherSpec extends AnyFunSuite {
 
   test("page window makes at most 3 requests past a null or [] page") {
     for (term <- Seq("[]", "null")) StubServer.withServer(feed(5, term), threads = 8) { s =>
-      val rows = fetcher.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = 100))
+      val rows = paged(fetcher, s.url("/w"), Pagination(endPage = 100))
       assert(rows == rowsOf(1 to 5), term)
       val past = requested(s).filter(_ > 6)
       assert(past.size <= 3 && past.distinct == past, s"$term: requested past page 6: $past")
@@ -196,12 +200,12 @@ class HttpFetcherSpec extends AnyFunSuite {
   test("page window: a 500 past the terminator raises nothing, a 500 before it raises after its retries") {
     val retrying = new HttpFetcher(maxRetries = 1, backoffMillis = 1L)
     StubServer.withServer(feed(3, fail = _ == 5), threads = 8) { s =>
-      val rows = retrying.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = 10))
+      val rows = paged(retrying, s.url("/w"), Pagination(endPage = 10))
       assert(rows == rowsOf(1 to 3))
     }
     StubServer.withServer(feed(6, fail = _ == 2), threads = 8) { s =>
       val e = intercept[HttpError] {
-        retrying.fetchPaginated(s.url("/w"), "GET", Pagination(endPage = 10))
+        paged(retrying, s.url("/w"), Pagination(endPage = 10))
       }
       assert(e.status == 500)
       assert(requested(s).count(_ == 2) == 2, "one request and one retry of page 2")

@@ -10,14 +10,15 @@ import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
-/** The `http` connector decodes with Spark's own JSON reader, so for any
-  * feed it returns the same rows as `HttpTables.load` (`spark.read.json`),
-  * under a random projection and a comparison filter the scan is handed
-  * as a pushed filter. Rows mix longs, doubles, strings, booleans, an
-  * array and a nested struct, with explicit nulls and missing fields. */
+/** The `http` connector and `HttpTables.load` (which caches the
+  * connector's scan) decode with Spark's own JSON reader, so for any feed
+  * both return the schema and rows of `spark.read.json` over the same JSON
+  * lines, under a random projection and a comparison filter the scan is
+  * handed as a pushed filter. Rows mix longs, doubles, strings, booleans,
+  * an array and a nested struct, with explicit nulls and missing fields. */
 object HttpConnectorProps extends Properties("HttpConnector") with SparkSpec {
 
-  // every case runs two Spark loads and two queries
+  // every case runs three Spark loads and three queries
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(20)
 
@@ -69,12 +70,15 @@ object HttpConnectorProps extends Properties("HttpConnector") with SparkSpec {
   property("format(\"http\") returns the rows HttpTables.load returns") =
     forAll(Gen.choose(1, 20).flatMap(Gen.listOfN(_, genRow)), genFilter,
       Gen.someOf(fields)) { (rows, filter, keep) =>
+      import spark.implicits._
       val body = rows.mkString("[", ",", "]")
+      val oracle = spark.read.json(spark.createDataset(rows))
+      val expected = query(oracle, filter, keep.toSeq)
       StubServer.withServer({ case ("GET", "/feed", _) => (200, body) }) { srv =>
         val viaConnector = spark.read.format("http").option("url", srv.url("/feed")).load()
         val viaTables = HttpTables.load(spark, Source("feed", srv.url("/feed")))
-        try viaConnector.schema == viaTables.schema &&
-          query(viaConnector, filter, keep.toSeq) == query(viaTables, filter, keep.toSeq)
+        try Seq(viaConnector, viaTables).forall(df =>
+          df.schema == oracle.schema && query(df, filter, keep.toSeq) == expected)
         finally viaTables.unpersist()
       }
     }

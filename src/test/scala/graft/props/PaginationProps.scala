@@ -1,6 +1,6 @@
 package graft.http // for private[http] pageUrl access
 
-import graft.config.Pagination
+import graft.config.{Pagination, Source}
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -33,16 +33,16 @@ object PaginationProps extends Properties("Pagination") {
   property("any page split concatenates back to the original rows") =
     forAll(genRows, genSize) { (rows, per) =>
       serve(rows, per)
-      val got = fetcher.fetchPaginated(server.url("/rows"), "GET",
-        Pagination(startPage = 1, endPage = 1000, pageSize = per))
+      val got = fetcher.fetchRows(Source("paged", server.url("/rows"),
+        pagination = Some(Pagination(startPage = 1, endPage = 1000, pageSize = per))))
       got == rows.map(v => s"""{"v":$v}""")
     }
 
   property("end_page truncates to at most end_page pages") =
     forAll(genRows, genSize, Gen.chooseNum(1, 5)) { (rows, per, endPage) =>
       serve(rows, per)
-      val got = fetcher.fetchPaginated(server.url("/rows"), "GET",
-        Pagination(startPage = 1, endPage = endPage, pageSize = per))
+      val got = fetcher.fetchRows(Source("paged", server.url("/rows"),
+        pagination = Some(Pagination(startPage = 1, endPage = endPage, pageSize = per))))
       val expected = rows.take(per * endPage).map(v => s"""{"v":$v}""")
       got == expected
     }
@@ -51,8 +51,8 @@ object PaginationProps extends Properties("Pagination") {
     forAll(genRows.suchThat(_.nonEmpty), genSize, Gen.chooseNum(1, 4)) {
       (rows, per, start) =>
         serve(rows, per)
-        val got = fetcher.fetchPaginated(server.url("/rows"), "GET",
-          Pagination(startPage = start, endPage = 1000, pageSize = per))
+        val got = fetcher.fetchRows(Source("paged", server.url("/rows"),
+          pagination = Some(Pagination(startPage = start, endPage = 1000, pageSize = per))))
         val expected = rows.drop(per * (start - 1)).map(v => s"""{"v":$v}""")
         got == expected
     }

@@ -7,7 +7,9 @@ import graft.http.StubServer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end register→SQL over the in-process stub server — the E1/E2
@@ -79,6 +81,25 @@ class HttpTablesSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHe
     }
   }
 
+  test("a format(\"http\") read of a registered URL fetches anew, not from the cached snapshot") {
+    @volatile var body = """[{"x":1}]"""
+    StubServer.withServer({ case ("GET", "/u", _) => (200, body) }) { s =>
+      val df = HttpTables.register(spark, Source("u_snap", s.url("/u")))
+      try {
+        assert(df.count() == 1L)
+        body = """[{"x":2},{"x":3}]"""
+        val fresh = spark.read.format("http").option("url", s.url("/u")).load()
+        val cached = collect(fresh.queryExecution.executedPlan) { case m: InMemoryTableScanExec => m }
+        assert(cached.isEmpty, fresh.queryExecution.executedPlan)
+        assert(fresh.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 3L))
+        assert(spark.table("u_snap").collect().map(_.getLong(0)).toSeq == Seq(1L))
+      } finally {
+        df.unpersist()
+        spark.catalog.dropTempView("u_snap")
+      }
+    }
+  }
+
   // ---- snapshot sizing: one partition when small ----
 
   private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
@@ -94,7 +115,8 @@ class HttpTablesSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHe
       val df = HttpTables.register(spark, Source("small", s.url("/small")))
       try {
         assert(df.queryExecution.executedPlan.outputPartitioning == SinglePartition)
-        // materialize the cache: its size then lets the join broadcast
+        // every row is in the snapshot; the self-join below broadcasts on
+        // the scan's statistics whether or not this count ran first
         assert(df.count() == 2000L)
         val grouped = spark.sql("SELECT k, count(*) AS n, sum(v) AS t FROM small GROUP BY k")
         val window = spark.sql("""SELECT count(*) FROM (SELECT id,
@@ -106,6 +128,29 @@ class HttpTablesSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHe
         assert(window.head().getLong(0) == 7L)
         assert(joined.head().getLong(0) == 2000L - 2000 / 7) // rows with k >= 1
       } finally df.unpersist()
+    }
+  }
+
+  test("two fresh snapshots joined before any action plan a broadcast hash join") {
+    val dim = """[{"k":0,"name":"zero"},{"k":3,"name":"three"},{"k":6,"name":"six"}]"""
+    StubServer.withServer({
+      case ("GET", "/fact", _) => (200, rows(2000))
+      case ("GET", "/dim", _) => (200, dim)
+    }) { s =>
+      val fact = HttpTables.register(spark, Source("j_fact", s.url("/fact")))
+      val names = HttpTables.register(spark, Source("j_dim", s.url("/dim")))
+      try {
+        val joined = spark.sql(
+          "SELECT d.name, count(*) AS n FROM j_fact f JOIN j_dim d ON f.k = d.k GROUP BY d.name")
+        val plan = joined.queryExecution.executedPlan
+        assert(collect(plan) { case j: BroadcastHashJoinExec => j }.nonEmpty, plan)
+        assert(collect(plan) { case j: SortMergeJoinExec => j }.isEmpty, plan)
+        val counts = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(counts == Map("zero" -> 285L, "three" -> 286L, "six" -> 285L))
+      } finally {
+        fact.unpersist(); names.unpersist()
+        Seq("j_fact", "j_dim").foreach(spark.catalog.dropTempView)
+      }
     }
   }
 

@@ -21,15 +21,22 @@ import graft.Tables.t
   */
 object Affinity {
 
-  /** q_affinity_pairs entry: top brand pairs by order co-occurrence. */
-  def pairsQ(s: SparkSession, dir: String): DataFrame = {
+  /** The distinct (order `ok`, brand `b`) baskets every query here
+    * starts from; the header says why the distinct comes first. */
+  private[ops] def brandBaskets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val baskets = t(s, dir, "lineitem")
+    t(s, dir, "lineitem")
       .select($"l_orderkey", $"l_partkey")
       .join(t(s, dir, "part").select($"p_partkey", $"p_brand"),
         $"l_partkey" === $"p_partkey")
       .select($"l_orderkey".as("ok"), $"p_brand".as("b"))
       .distinct()
+  }
+
+  /** q_affinity_pairs entry: top brand pairs by order co-occurrence. */
+  def pairsQ(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val baskets = brandBaskets(s, dir)
     baskets.as("x").join(baskets.as("y"),
         $"x.ok" === $"y.ok" && $"x.b" < $"y.b")
       .groupBy($"x.b".as("brand_a"), $"y.b".as("brand_b"))
@@ -63,12 +70,7 @@ object Affinity {
     * exact integers until the one shared cosine expression, 6 dp. */
   def cosineQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val baskets = t(s, dir, "lineitem")
-      .select($"l_orderkey", $"l_partkey")
-      .join(t(s, dir, "part").select($"p_partkey", $"p_brand"),
-        $"l_partkey" === $"p_partkey")
-      .select($"l_orderkey".as("ok"), $"p_brand".as("b"))
-      .distinct()
+    val baskets = brandBaskets(s, dir)
     val freq = baskets.groupBy($"b").agg(count(lit(1)).as("nb"))
     val pairs = baskets.as("x").join(baskets.as("y"),
         $"x.ok" === $"y.ok" && $"x.b" < $"y.b")
@@ -123,12 +125,7 @@ object Affinity {
     * are exact integers, one division per metric. */
   def rulesQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val baskets = t(s, dir, "lineitem")
-      .select($"l_orderkey", $"l_partkey")
-      .join(t(s, dir, "part").select($"p_partkey", $"p_brand"),
-        $"l_partkey" === $"p_partkey")
-      .select($"l_orderkey".as("ok"), $"p_brand".as("b"))
-      .distinct()
+    val baskets = brandBaskets(s, dir)
     val tot = baskets.select($"ok").distinct().agg(count(lit(1)).as("n_tot"))
     val supp = baskets.groupBy($"b").agg(count(lit(1)).as("n_b"))
     val both = baskets.as("x").join(baskets.as("y"),
@@ -198,12 +195,7 @@ object Affinity {
   def recCoverageQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val baskets = t(s, dir, "lineitem")
-      .select($"l_orderkey", $"l_partkey")
-      .join(t(s, dir, "part").select($"p_partkey", $"p_brand"),
-        $"l_partkey" === $"p_partkey")
-      .select($"l_orderkey".as("ok"), $"p_brand".as("b"))
-      .distinct()
+    val baskets = brandBaskets(s, dir)
     val freq = baskets.groupBy($"b").agg(count(lit(1)).as("nb"))
     val sym = baskets.as("x").join(baskets.as("y"),
         $"x.ok" === $"y.ok" && $"x.b" =!= $"y.b")

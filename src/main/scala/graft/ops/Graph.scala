@@ -58,6 +58,24 @@ object Graph {
       .checkpoint()
   }
 
+  /** The p75-strong edges of a weighted edge frame (src, dst, w): the
+    * rows with w at or above the ⌈0.75·n⌉-th smallest weight in (w,
+    * src, dst) order, an exact order statistic over the |V|²-bounded
+    * list, same columns. The threshold is taken over `edges` as given:
+    * a caller that drops self-loops first gets the self-loop-free
+    * threshold, which differs from the full list's. */
+  private[ops] def strongEdges(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import edges.sparkSession.implicits._
+    val thr = edges
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(lit(0)).orderBy($"w", $"src", $"dst")))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(lit(0))))
+      .filter($"rn" === expr("(75 * n + 99) div 100"))
+      .select($"w".as("thr"))
+    edges.join(broadcast(thr), $"w" >= $"thr").drop("thr")
+  }
+
   /** q_graph_pagerank entry: 3-iteration PageRank over the
     * nation→nation trade graph; 25 rows, rank + in/out degree. */
   def pagerankQ(s: SparkSession, dir: String): DataFrame = {
@@ -310,18 +328,8 @@ object Graph {
     * build every graph query amortizes. The pair grid is a broadcast
     * NLJ by construction (25 nodes), whitelisted in the plan audit. */
   def neighborSimQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val edges = tradeEdges(s, dir)
-    val wAll = Window.partitionBy(lit(0))
-    val thr = edges
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(lit(0)).orderBy($"w", $"src", $"dst")))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(75 * n + 99) div 100"))
-      .select($"w".as("thr"))
-    val strong = edges.join(broadcast(thr), $"w" >= $"thr")
-      .select($"src", $"dst")
+    val strong = strongEdges(tradeEdges(s, dir)).select($"src", $"dst")
     val deg = strong.groupBy($"src").agg(count(lit(1)).as("deg"))
     val common = strong.as("a").join(strong.as("b"),
         $"a.dst" === $"b.dst" && $"a.src" < $"b.src")
@@ -575,16 +583,9 @@ object Graph {
     * landing on the identical fixpoint, the cross-algorithm proof
     * shape). */
   def sccQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val e = tradeEdges(s, dir).filter($"src" =!= $"dst")
-    val thr = e
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(lit(0)).orderBy($"w", $"src", $"dst")))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(lit(0))))
-      .filter($"rn" === expr("(75 * n + 99) div 100"))
-      .select($"w".as("thr"))
-    val strong = e.join(broadcast(thr), $"w" >= $"thr").select($"src", $"dst")
+    val strong = strongEdges(tradeEdges(s, dir).filter($"src" =!= $"dst"))
+      .select($"src", $"dst")
     val nodes = strong.select($"src".as("n"))
       .unionByName(strong.select($"dst".as("n"))).distinct()
     // per-round checkpoint: each squaring references the frame TWICE, so
@@ -654,23 +655,12 @@ object Graph {
       |FROM scc JOIN sz ON sz.scc_id = scc.scc_id
       |ORDER BY node""".stripMargin
 
-  /** The p75-strong undirected edge list shared by [[kcore]], [[bfsQ]],
-    * and [[neighborSimQ]]'s sparsification: edges at or above the exact
-    * p75 weight (order-statistic selection over the |V|²-bounded list),
-    * symmetrized. */
+  /** The p75-strong undirected edge list shared by [[kcore]], [[bfsQ]]
+    * and the other hop-based queries: the [[strongEdges]] of the trade
+    * graph, symmetrized. */
   private[ops] def strongUndirected(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val edges = tradeEdges(s, dir)
-    val wAll = Window.partitionBy(lit(0))
-    val thr = edges
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(lit(0)).orderBy($"w", $"src", $"dst")))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(75 * n + 99) div 100"))
-      .select($"w".as("thr"))
-    val strong = edges.join(broadcast(thr), $"w" >= $"thr")
-      .select($"src", $"dst")
+    val strong = strongEdges(tradeEdges(s, dir)).select($"src", $"dst")
     strong.unionByName(strong.select($"dst".as("src"), $"src".as("dst")))
       .distinct()
   }
@@ -896,21 +886,11 @@ object Graph {
     * idiom on the edge frame. Exact integers until the final shared
     * IEEE formula, 6 dp. */
   def assortativityQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
     // the raw trade graph is near-complete (uniform degrees → zero
-    // variance → r undefined), so correlate over the p75-STRONG edges —
-    // the same sparsification neighborSimQ documents; thr is an exact
-    // order-statistic selection over the |V|²-bounded edge list
-    val edges = tradeEdges(s, dir)
-    val thr = edges
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(lit(0)).orderBy($"w", $"src", $"dst")))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(lit(0))))
-      .filter($"rn" === expr("(75 * n + 99) div 100"))
-      .select($"w".as("thr"))
-    val strong = edges.join(broadcast(thr), $"w" >= $"thr")
-      .select($"src", $"dst")
+    // variance → r undefined), so correlate over the p75-STRONG edges
+    // ([[strongEdges]], the sparsification every strong-graph query uses)
+    val strong = strongEdges(tradeEdges(s, dir)).select($"src", $"dst")
     val outd = strong.groupBy($"src").agg(count(lit(1)).as("dx"))
     val ind = strong.groupBy($"dst").agg(count(lit(1)).as("dy"))
     strong
@@ -1611,17 +1591,8 @@ object Graph {
     * everything after the shared [[tradeEdges]] corpus pass is
     * |V|²-bounded. Exact integers throughout. */
   def motifsQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val edges = tradeEdges(s, dir)
-    val wAll = Window.partitionBy(lit(0))
-    val thr = edges
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(lit(0)).orderBy($"w", $"src", $"dst")))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(75 * n + 99) div 100"))
-      .select($"w".as("thr"))
-    val st = edges.join(broadcast(thr), $"w" >= $"thr")
+    val st = strongEdges(tradeEdges(s, dir))
       .filter($"src" =!= $"dst")
       .select($"src", $"dst")
     val paths = st.as("e1").join(st.as("e2"), $"e1.dst" === $"e2.src")
@@ -2128,18 +2099,9 @@ object Graph {
     * rows, and the k-grid join is \|V\|·k_max cells. Determinism: all
     * counts exact integers; φ in integer basis points. */
   def richClubQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val edges = tradeEdges(s, dir)
-    val wAll = Window.partitionBy(lit(0))
-    val thr = edges
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(lit(0)).orderBy($"w", $"src", $"dst")))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(75 * n + 99) div 100"))
-      .select($"w".as("thr"))
     // undirected simple edges: unordered strong pairs, self-loops out
-    val und = edges.join(broadcast(thr), $"w" >= $"thr")
+    val und = strongEdges(tradeEdges(s, dir))
       .filter($"src" =!= $"dst")
       .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
       .distinct()
@@ -2218,21 +2180,13 @@ object Graph {
     * weights and volumes are exact integers; φ in integer basis
     * points. */
   def conductanceQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    // the p75-strong sparsification (the neighborSimQ/richClubQ idiom):
+    // the p75-strong sparsification ([[strongEdges]], over the
+    // self-loop-free edges):
     // on the near-complete trade graph LPA collapses to ONE community
     // and every phi is degenerate; communities are only meaningful on
     // the strong backbone
-    val e0 = tradeEdges(s, dir).filter($"src" =!= $"dst")
-    val wAll = Window.partitionBy(lit(0))
-    val thr = e0
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(lit(0)).orderBy($"w", $"src", $"dst")))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .filter($"rn" === expr("(75 * n + 99) div 100"))
-      .select($"w".as("thr"))
-    val strong = e0.join(broadcast(thr), $"w" >= $"thr")
+    val strong = strongEdges(tradeEdges(s, dir).filter($"src" =!= $"dst"))
     val und = strong.select($"src".as("a"), $"dst".as("b"), $"w")
       .unionByName(strong.select($"dst".as("a"), $"src".as("b"), $"w"))
       .groupBy($"a", $"b").agg(sum($"w").as("w"))

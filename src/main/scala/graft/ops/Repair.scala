@@ -319,20 +319,11 @@ object Repair {
   def hampelQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val daily = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("day", $"ts").as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01', timestamp'2024-01-30',
-        |  interval 1 day)) AS d""".stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(daily, Seq("d", "event_type"), "left")
-      .select($"event_type", $"d",
-        when($"d" === lit("2024-01-10").cast("timestamp") ||
-            $"d" === lit("2024-01-22").cast("timestamp"),
-          coalesce($"cnt", lit(0L)) * 10)
-          .otherwise(coalesce($"cnt", lit(0L))).as("x"))
+    val dense = TimeSeries.denseCounts(t(s, dir, "events"), "day")
+      .select($"event_type", $"day".as("d"),
+        ($"x" * when($"day" === lit("2024-01-10").cast("timestamp") ||
+            $"day" === lit("2024-01-22").cast("timestamp"), 10L)
+          .otherwise(1L)).as("x"))
     // Spark disallows aggregate `median` with an explicit window frame,
     // so the rolling median uses the same grid-sized neighbor equi-join
     // as the MAD pass (the oracle mirrors this join formulation).

@@ -29,21 +29,9 @@ object Retrieval {
   private def postings(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Text.withToks(s, dir).select($"doc_id", $"toks")
-    val dl = docs.select($"doc_id", size($"toks").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
-    val tf = docs.select($"doc_id", explode($"toks").as("term"))
-      .filter($"term".isin(QTerms: _*))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val docFreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(docFreq), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0))
+    Text.bm25Weights(docs, Text.queryTf(docs, QTerms))
       .select($"term", $"doc_id", $"tf",
-        round($"idf" * ($"tf" * 2.2) /
-          ($"tf" + (lit(0.25) + $"dl" * 0.75 / $"avgdl") * 1.2), 9)
-          .cast("decimal(18,9)").as("score"))
+        round($"w", 9).cast("decimal(18,9)").as("score"))
   }
 
   private val postingsSql: String =
@@ -300,15 +288,11 @@ object Retrieval {
     val tf2 = docs.select($"doc_id", explode($"toks").as("term"))
       .join(broadcast(expanded), "term")
       .groupBy($"doc_id", $"term", $"qw").agg(count(lit(1)).as("tf"))
-    val df2 = tf2.groupBy($"term").agg(count(lit(1)).as("df"))
-    val rescored = tf2.join(broadcast(df2), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0))
-      .withColumn("w", $"qw" * $"idf" * ($"tf" * 2.2) /
-        ($"tf" + (lit(0.25) + $"dl" * 0.75 / $"avgdl") * 1.2))
+    // qw is 1 or Beta = 0.5, a power of two: qw · w is bit-identical to
+    // folding qw into the weight's numerator
+    val rescored = Text.bm25Weights(docs, tf2)
       .groupBy($"doc_id")
-      .agg(sum(round($"w", 9).cast("decimal(28,9)")).as("sc2"),
+      .agg(sum(round($"qw" * $"w", 9).cast("decimal(28,9)")).as("sc2"),
         count(lit(1)).cast("int").as("n_terms_hit"))
     val rescoredTop = Rank.topK(rescored,
       Seq($"sc2".desc, $"doc_id"), 10, "rn")
@@ -550,23 +534,11 @@ object Retrieval {
   def rankAgreementQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    // BM25 ranks from the EXACT decimal score (the published Text.bm25
-    // rounds to 6 dp for display; ranking must use the unrounded sum so
-    // both engines order identically)
+    // BM25 ranks from the EXACT decimal score: the 9-dp-rounded
+    // [[Text.bm25Weights]] summed as DECIMAL(28,9), not the 6-dp display
+    // value, so both engines order identically
     val docs = Text.withToks(s, dir).select($"doc_id", $"toks")
-    val dls = docs.select($"doc_id", size($"toks").cast("double").as("dl"))
-    val bstats = dls.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
-    val tfb = docs.select($"doc_id", explode($"toks").as("term"))
-      .filter($"term".isin(QTerms: _*))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val dfb = tfb.groupBy($"term").agg(count(lit(1)).as("df"))
-    val bm = tfb.join(broadcast(dfb), "term")
-      .join(dls, "doc_id")
-      .crossJoin(broadcast(bstats))
-      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0))
-      .withColumn("w", $"idf" * ($"tf" * 2.2) /
-        ($"tf" + (lit(0.25) + $"dl" * 0.75 / $"avgdl") * 1.2))
+    val bm = Text.bm25Weights(docs, Text.queryTf(docs, QTerms))
       .groupBy($"doc_id")
       .agg(sum(round($"w", 9).cast("decimal(28,9)")).as("sc"))
     // compare at the shared depth k = 10 (QLM's contract depth);

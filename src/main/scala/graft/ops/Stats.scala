@@ -304,17 +304,7 @@ object Stats {
   def periodQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = TimeSeries.denseCounts(t(s, dir, "events"), "hour")
       .withColumn("idx", row_number().over(
         Window.partitionBy($"event_type").orderBy($"hour")).cast("long"))
     val lags = (2 to 36).map(_.toLong).toDF("k")
@@ -381,18 +371,7 @@ object Stats {
   def acfQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour",
-        coalesce($"cnt", lit(0L)).as("x"))
+    val dense = TimeSeries.denseCounts(t(s, dir, "events"), "hour")
     val w = Window.partitionBy($"event_type").orderBy($"hour")
     def acfAt(lagK: Int): DataFrame = dense
       .withColumn("y", lag($"x", lagK).over(w))
@@ -2175,18 +2154,8 @@ object Stats {
   def grangerQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
     val w = Window.partitionBy($"event_type").orderBy($"hour")
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = TimeSeries.denseCounts(t(s, dir, "events"), "hour")
       .withColumn("idx", (row_number().over(w) - 1).cast("long"))
     val lagged = dense
       .withColumn("x1", lag($"x", 1).over(w))
@@ -3069,17 +3038,7 @@ object Stats {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     graft.Session.ensureCheckpointDir(s)
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = TimeSeries.denseCounts(t(s, dir, "events"), "hour")
     // r15 (guide §2.4 — remove shuffles outright): the five lag
     // windows share one spec, so ALL five lag columns ride ONE window
     // node; the whole-frame stats (tt/sx/sxx) fold into the SAME

@@ -516,6 +516,37 @@ object Text {
       |SELECT doc_id, term, tf, df, ROUND(tfidf, 6) AS tfidf, CAST(rk AS INT) AS rk
       |FROM r WHERE rk <= 3 ORDER BY doc_id, rk LIMIT 300""".stripMargin
 
+  /** Per-(doc_id, term) counts `tf` of the query `terms` over the
+    * tokenized corpus `docs` (doc_id, toks); the `isin` filter sits on
+    * the explode, so only query-term postings survive it. */
+  private[ops] def queryTf(docs: DataFrame, terms: Seq[String]): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select($"doc_id", explode($"toks").as("term"))
+      .filter($"term".isin(terms: _*))
+      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
+  }
+
+  /** Okapi BM25 term weights (k1 = 1.2, b = 0.75, Lucene idf
+    * ln(1 + (N − df + 0.5)/(df + 0.5))): the hit rows `tf` (doc_id,
+    * term, tf, …) over the tokenized corpus `docs` (doc_id, toks),
+    * joined with the term's df, the doc length dl and the corpus
+    * n_docs / avgdl (vocabulary- and O(1)-bounded broadcasts), plus
+    * `idf` and the unrounded weight `w`. Rounding, casts and the per-doc
+    * merge stay with each caller. */
+  private[ops] def bm25Weights(docs: DataFrame, tf: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    val dl = docs.select($"doc_id", size($"toks").cast("double").as("dl"))
+    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
+      avg($"dl").as("avgdl"))
+    val docFreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
+    tf.join(broadcast(docFreq), "term")
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(stats))
+      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0))
+      .withColumn("w",
+        $"idf" * ($"tf" * 2.2) / ($"tf" + (lit(0.25) + $"dl" * 0.75 / $"avgdl") * 1.2))
+  }
+
   /** BM25 keyword retrieval (Okapi, Lucene idf form; k1 = 1.2,
     * b = 0.75): top-20 documents for a fixed query term set — the
     * lexical half of hybrid retrieval next to [[Similarity]]'s vector
@@ -535,19 +566,7 @@ object Text {
     import s.implicits._
     val qTerms = Seq("dup", "vector", "spark")
     val docs = withToks(s, dir).select($"doc_id", $"toks")
-    val dl = docs.select($"doc_id", size($"toks").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
-    val tf = docs.select($"doc_id", explode($"toks").as("term"))
-      .filter($"term".isin(qTerms: _*))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val docFreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(docFreq), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0))
-      .withColumn("w",
-        $"idf" * ($"tf" * 2.2) / ($"tf" + (lit(0.25) + $"dl" * 0.75 / $"avgdl") * 1.2))
+    bm25Weights(docs, queryTf(docs, qTerms))
       .groupBy($"doc_id")
       .agg(sum(round($"w", 9).cast("decimal(28,9)")).as("sc"),
         count(lit(1)).cast("int").as("n_terms_hit"))
@@ -575,19 +594,7 @@ object Text {
     import s.implicits._
     val qTerms = Seq("dup", "vector", "spark")
     val docs = withToks(s, dir).select($"doc_id", $"toks")
-    val dl = docs.select($"doc_id", size($"toks").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
-    val tf = docs.select($"doc_id", explode($"toks").as("term"))
-      .filter($"term".isin(qTerms: _*))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val docFreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    val scoredDocs = tf.join(broadcast(docFreq), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0))
-      .withColumn("w",
-        $"idf" * ($"tf" * 2.2) / ($"tf" + (lit(0.25) + $"dl" * 0.75 / $"avgdl") * 1.2))
+    val scoredDocs = bm25Weights(docs, queryTf(docs, qTerms))
       .groupBy($"doc_id")
       .agg(sum(round($"w", 9).cast("decimal(28,9)")).as("sc"),
         count(lit(1)).as("rel")) // graded relevance = distinct terms hit
@@ -673,19 +680,7 @@ object Text {
     import s.implicits._
     val qTerms = Seq("dup", "vector", "spark")
     val docs = withToks(s, dir).select($"doc_id", $"toks")
-    val dl = docs.select($"doc_id", size($"toks").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
-    val tf = docs.select($"doc_id", explode($"toks").as("term"))
-      .filter($"term".isin(qTerms: _*))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val docFreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    val scoredDocs = tf.join(broadcast(docFreq), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0))
-      .withColumn("w",
-        $"idf" * ($"tf" * 2.2) / ($"tf" + (lit(0.25) + $"dl" * 0.75 / $"avgdl") * 1.2))
+    val scoredDocs = bm25Weights(docs, queryTf(docs, qTerms))
       .groupBy($"doc_id")
       .agg(sum(round($"w", 9).cast("decimal(28,9)")).as("sc"),
         count(lit(1)).as("rel"))
@@ -781,19 +776,7 @@ object Text {
     import s.implicits._
     val qTerms = Seq("dup", "vector", "spark")
     val docs = withToks(s, dir).select($"doc_id", $"toks")
-    val dl = docs.select($"doc_id", size($"toks").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
-    val tf = docs.select($"doc_id", explode($"toks").as("term"))
-      .filter($"term".isin(qTerms: _*))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val docFreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    val lexScored = tf.join(broadcast(docFreq), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1.0))
-      .withColumn("w", $"idf" * ($"tf" * 2.2) /
-        ($"tf" + (lit(0.25) + $"dl" * 0.75 / $"avgdl") * 1.2))
+    val lexScored = bm25Weights(docs, queryTf(docs, qTerms))
       .groupBy($"doc_id")
       .agg(sum(round($"w", 9).cast("decimal(28,9)")).as("sc"))
     val lex = Rank.topK(lexScored,

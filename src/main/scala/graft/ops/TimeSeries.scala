@@ -21,6 +21,48 @@ import graft.Tables.t
   * values bit-for-bit. */
 object TimeSeries {
 
+  /** The events calendar: one row per `step` ("hour": 720 rows, "day":
+    * 30 rows) from 2024-01-01 00:00 UTC through 2024-01-30, as a
+    * TIMESTAMP column named after the step. Every dense series in graft
+    * is laid on this grid, so a step with no events reads as a 0 cell
+    * instead of a missing row. */
+  private[ops] def calendar(s: SparkSession, step: String): DataFrame =
+    s.sql(
+      s"""SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
+        |  timestamp'2024-01-30 23:00:00', interval 1 $step)) AS $step"""
+        .stripMargin)
+
+  /** The calendar's 30 days as a DATE column `day`. */
+  private[ops] def calendarDates(s: SparkSession): DataFrame =
+    s.sql(
+      """SELECT explode(sequence(date'2024-01-01', date'2024-01-30',
+        |  interval 1 day)) AS day""".stripMargin)
+
+  /** `grid` × every event type of `events` (broadcast), left joined to
+    * the per-(type, step) `cells` on `keys`: one row per cell of the
+    * grid, `cells`' columns null where a cell saw no events. */
+  private[ops] def densify(events: DataFrame, grid: DataFrame,
+      cells: DataFrame, keys: Seq[String]): DataFrame =
+    grid.crossJoin(broadcast(events.select(col("event_type")).distinct()))
+      .join(cells, keys, "left")
+
+  /** Dense (event_type × [[calendar]] step) count series: columns
+    * `event_type`, the step column and `x`, the number of `rows` in the
+    * cell (0 when none). `rows` is `events` or a filter of it; the
+    * series are every type of `events`. */
+  private[ops] def denseCounts(events: DataFrame, step: String,
+      rows: DataFrame): DataFrame = {
+    val cells = rows
+      .groupBy(col("event_type"), date_trunc(step, col("ts")).as(step))
+      .agg(count(lit(1)).as("cnt"))
+    densify(events, calendar(events.sparkSession, step), cells,
+      Seq(step, "event_type"))
+      .select(col("event_type"), col(step), coalesce(col("cnt"), lit(0L)).as("x"))
+  }
+
+  private[ops] def denseCounts(events: DataFrame, step: String): DataFrame =
+    denseCounts(events, step, events)
+
   def resampleQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val hourly = t(s, dir, "events")
@@ -28,15 +70,10 @@ object TimeSeries {
       .agg(count(lit(1)).as("n_obs"),
         (sum($"value".cast("decimal(18,6)")).cast("double") /
           count(lit(1))).as("mean_v"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
     val w = Window.partitionBy($"event_type").orderBy($"hour")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
+    densify(t(s, dir, "events"), calendar(s, "hour"), hourly,
+      Seq("hour", "event_type"))
       .select($"hour", $"event_type",
         coalesce($"n_obs", lit(0L)).as("n_obs"),
         $"mean_v".isNull.cast("int").as("gap"),
@@ -133,7 +170,7 @@ object TimeSeries {
   /** Seasonal anomaly detection: per (event_type, hour-of-day) baseline
     * over the month, flag (day, hour) cells whose event count sits ≥ 2
     * population-σ from their seasonal mean. The grid is DENSIFIED
-    * first (same literal 720-hour grid as [[resampleQ]]): a naive
+    * first (on the 720-hour [[calendar]], via [[densify]]): a naive
     * groupBy never emits a zero row, so the most important anomaly — a
     * silent pipeline dropout — would be invisible to it AND would bias
     * every baseline upward.
@@ -149,14 +186,10 @@ object TimeSeries {
     val counts = t(s, dir, "events")
       .groupBy($"event_type", to_date($"ts").as("d"), hour($"ts").as("h"))
       .agg(count(lit(1)).as("n"))
-    val grid = s.sql(
-      """SELECT to_date(hr) AS d, hour(hr) AS h FROM (
-        |  SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |    timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hr)"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(counts, Seq("event_type", "d", "h"), "left")
+    val grid = calendar(s, "hour")
+      .select(to_date($"hour").as("d"), hour($"hour").as("h"))
+    val dense = densify(t(s, dir, "events"), grid, counts,
+      Seq("event_type", "d", "h"))
       .select($"event_type", $"d", $"h", coalesce($"n", lit(0L)).as("n"))
     val p = Window.partitionBy($"event_type", $"h")
     dense
@@ -203,8 +236,8 @@ object TimeSeries {
       |ORDER BY event_type, d, h""".stripMargin
 
   /** Per-series daily-count trend: least-squares slope / intercept / R²
-    * of events-per-day against the day index, over the same densified
-    * grid as [[seasonalQ]] — the "is this feed growing, shrinking, or
+    * of events-per-day against the day index, over the densified
+    * [[calendarDates]] grid — the "is this feed growing, shrinking, or
     * flat" monitor, with R² separating a real trend from noise.
     *
     * Scale shape: one map-side-combinable daily groupBy, grid-densified,
@@ -217,16 +250,12 @@ object TimeSeries {
   def trendQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val daily = t(s, dir, "events")
-      .groupBy($"event_type", to_date($"ts").as("d"))
+      .groupBy($"event_type", to_date($"ts").as("day"))
       .agg(count(lit(1)).as("n"))
-    val grid = s.sql(
-      """SELECT explode(sequence(date'2024-01-01', date'2024-01-30',
-        |  interval 1 day)) AS d""".stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(daily, Seq("event_type", "d"), "left")
+    val dense = densify(t(s, dir, "events"), calendarDates(s), daily,
+      Seq("event_type", "day"))
       .select($"event_type",
-        (datediff($"d", lit("2024-01-01")) + 1).cast("long").as("x"),
+        (datediff($"day", lit("2024-01-01")) + 1).cast("long").as("x"),
         coalesce($"n", lit(0L)).as("y"))
     dense.groupBy($"event_type")
       .agg(count(lit(1)).cast("double").as("m"),
@@ -293,17 +322,7 @@ object TimeSeries {
   def cusumQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = denseCounts(t(s, dir, "events"), "hour")
     val w = Window.partitionBy($"event_type").orderBy($"hour")
     val wAll = Window.partitionBy($"event_type")
     val scored = dense
@@ -552,14 +571,10 @@ object TimeSeries {
     val counts = t(s, dir, "events")
       .groupBy($"event_type", to_date($"ts").as("d"), hour($"ts").as("h"))
       .agg(count(lit(1)).as("n"))
-    val grid = s.sql(
-      """SELECT to_date(hr) AS d, hour(hr) AS h FROM (
-        |  SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |    timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hr)"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(counts, Seq("event_type", "d", "h"), "left")
+    val grid = calendar(s, "hour")
+      .select(to_date($"hour").as("d"), hour($"hour").as("h"))
+    val dense = densify(t(s, dir, "events"), grid, counts,
+      Seq("event_type", "d", "h"))
       .select($"event_type", $"d", $"h", coalesce($"n", lit(0L)).as("n"))
     val ma = Window.partitionBy($"event_type").orderBy($"d", $"h")
       .rowsBetween(-12, 12)
@@ -804,11 +819,7 @@ object TimeSeries {
       .agg(
         sum(when($"event_type" === "click", 1L).otherwise(0L)).as("xc"),
         sum(when($"event_type" === "purchase", 1L).otherwise(0L)).as("yc"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val dense = grid.join(hourly, Seq("hour"), "left")
+    val dense = calendar(s, "hour").join(hourly, Seq("hour"), "left")
       .select($"hour", coalesce($"xc", lit(0L)).as("x"),
         coalesce($"yc", lit(0L)).as("y"))
     val w = Window.orderBy($"hour")
@@ -1284,11 +1295,7 @@ object TimeSeries {
     val hourly = t(s, dir, "events")
       .groupBy(date_trunc("hour", $"ts").as("hour"))
       .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val dense = grid.join(hourly, Seq("hour"), "left")
+    val dense = calendar(s, "hour").join(hourly, Seq("hour"), "left")
       .select($"hour", coalesce($"cnt", lit(0L)).as("x"))
       .withColumn("idx",
         (row_number().over(Window.orderBy($"hour")) - 1).cast("long"))
@@ -1401,18 +1408,8 @@ object TimeSeries {
     * back. Identical cost to ONE [[Stats.acfQ]] pass plus a scan. */
   def ar2Q(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
     val w = Window.partitionBy($"event_type").orderBy($"hour")
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = denseCounts(t(s, dir, "events"), "hour")
       .withColumn("idx",
         (row_number().over(w) - 1).cast("long"))
       .withColumn("x1", lag($"x", 1).over(w))
@@ -1534,19 +1531,9 @@ object TimeSeries {
     * series parallelize across keys, the fold never shuffles. */
   def crostonQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hourly = t(s, dir, "events")
-      .filter($"value" > 120.0)
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("c"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour",
-        coalesce($"c", lit(0L)).cast("double").as("x"))
+    val events = t(s, dir, "events")
+    denseCounts(events, "hour", events.filter($"value" > 120.0))
+      .withColumn("x", $"x".cast("double"))
       .groupBy($"event_type")
       .agg(sort_array(collect_list(struct($"hour", $"x"))).as("arr"))
       .withColumn("xs", expr("transform(arr, e -> e.x)"))
@@ -1815,17 +1802,7 @@ object TimeSeries {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val m = 12
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = denseCounts(t(s, dir, "events"), "hour")
     val tot = dense.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"x").as("sx"),
         sum($"x" * $"x").as("sxx"))
@@ -1920,22 +1897,13 @@ object TimeSeries {
   def maseQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val daily = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("day", $"ts").as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01', timestamp'2024-01-30',
-        |  interval 1 day)) AS d""".stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(daily, Seq("d", "event_type"), "left")
-      .select($"event_type", $"d", coalesce($"cnt", lit(0L)).as("x"))
-    val w = Window.partitionBy($"event_type").orderBy($"d")
+    val dense = denseCounts(t(s, dir, "events"), "day")
+    val w = Window.partitionBy($"event_type").orderBy($"day")
     val test = lit("2024-01-24").cast("timestamp")
     val f = dense
       .withColumn("f", lag($"x", 7).over(w))
       .filter($"f".isNotNull)
-      .withColumn("is_test", $"d" >= test)
+      .withColumn("is_test", $"day" >= test)
     f.groupBy($"event_type")
       .agg(
         sum(when($"is_test", abs($"x" - $"f"))).as("ae_test"),
@@ -2097,17 +2065,7 @@ object TimeSeries {
   def walshQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = denseCounts(t(s, dir, "events"), "hour")
       .withColumn("tt", (row_number().over(
         Window.partitionBy($"event_type").orderBy($"hour")) - 1).cast("long"))
       .filter($"tt" < 512)
@@ -2214,18 +2172,9 @@ object TimeSeries {
     import s.implicits._
     val n = 30
     val big = 1000000000000000L // sentinel for out-of-range neighbors
-    val daily = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("day", $"ts").as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01', timestamp'2024-01-30',
-        |  interval 1 day)) AS d""".stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(daily, Seq("d", "event_type"), "left")
-      .select($"event_type", $"d", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = denseCounts(t(s, dir, "events"), "day")
     val arrs = dense.groupBy($"event_type")
-      .agg(expr("transform(array_sort(collect_list(struct(d, x))), p -> p.x)")
+      .agg(expr("transform(array_sort(collect_list(struct(day, x))), p -> p.x)")
         .as("xs"))
     val w = Window.partitionBy(lit(0)).orderBy($"event_type")
     val pairs = arrs
@@ -2343,18 +2292,9 @@ object TimeSeries {
     val n = 30
     val hi = n - 1
     val big = 1000000000000000L
-    val daily = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("day", $"ts").as("d"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01', timestamp'2024-01-30',
-        |  interval 1 day)) AS d""".stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(daily, Seq("d", "event_type"), "left")
-      .select($"event_type", $"d", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = denseCounts(t(s, dir, "events"), "day")
     val arrs = dense.groupBy($"event_type")
-      .agg(expr("transform(array_sort(collect_list(struct(d, x))), p -> p.x)")
+      .agg(expr("transform(array_sort(collect_list(struct(day, x))), p -> p.x)")
         .as("xs"))
     val w = Window.partitionBy(lit(0)).orderBy($"event_type")
     val pairs = arrs
@@ -2493,17 +2433,7 @@ object TimeSeries {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val delta = 0.5
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = denseCounts(t(s, dir, "events"), "hour")
     val stats = dense.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"x").as("sx"),
         sum($"x" * $"x").as("sxx"))
@@ -2591,17 +2521,7 @@ object TimeSeries {
   def turningPointsQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val hourly = t(s, dir, "events")
-      .groupBy($"event_type", date_trunc("hour", $"ts").as("hour"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 23:00:00', interval 1 hour)) AS hour"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(hourly, Seq("hour", "event_type"), "left")
-      .select($"event_type", $"hour", coalesce($"cnt", lit(0L)).as("x"))
+    val dense = denseCounts(t(s, dir, "events"), "hour")
     val w = Window.partitionBy($"event_type").orderBy($"hour")
     dense
       .withColumn("xp", lag($"x", 1).over(w))
@@ -2690,18 +2610,9 @@ object TimeSeries {
   def ewmaChartQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val daily = t(s, dir, "events")
-      .filter($"ts" < lit("2024-01-31").cast("timestamp"))
-      .groupBy($"event_type", date_trunc("day", $"ts").as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val grid = s.sql(
-      """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-        |  timestamp'2024-01-30 00:00:00', interval 1 day)) AS day"""
-        .stripMargin)
-    val series = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(series))
-      .join(daily, Seq("day", "event_type"), "left")
-      .select($"event_type", $"day", coalesce($"cnt", lit(0L)).as("x"))
+    val events = t(s, dir, "events")
+    val dense = denseCounts(events, "day",
+      events.filter($"ts" < lit("2024-01-31").cast("timestamp")))
     val uLit = array(ewmaU.map(u =>
       lit(u.toString).cast("decimal(38,0)")): _*)
     val wLit = array(ewmaW.map(lit(_)): _*)

@@ -271,12 +271,8 @@ object Validate {
     val daily = t(s, dir, "events")
       .groupBy($"event_type", to_date($"ts").as("day"))
       .agg(count(lit(1)).as("c"))
-    val grid = s.sql(
-      """SELECT explode(sequence(date'2024-01-01', date'2024-01-30',
-        |  interval 1 day)) AS day""".stripMargin)
-    val types = t(s, dir, "events").select($"event_type").distinct()
-    val dense = grid.crossJoin(broadcast(types))
-      .join(daily, Seq("event_type", "day"), "left")
+    val dense = TimeSeries.densify(t(s, dir, "events"),
+      TimeSeries.calendarDates(s), daily, Seq("event_type", "day"))
       .select($"event_type", $"day", coalesce($"c", lit(0L)).as("c"))
     val w7 = Window.partitionBy($"event_type").orderBy($"day")
       .rowsBetween(-7, -1)

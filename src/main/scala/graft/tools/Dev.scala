@@ -6,9 +6,15 @@ package graft.tools
   * Usage:
   *   tools/run.sh graft.tools.Dev entry
   *   tools/run.sh graft.tools.Dev explain <name> [sfDir]
+  *   tools/run.sh graft.tools.Dev finalplan <name> [sfDir]
   *   tools/run.sh graft.tools.Dev show <name> [sfDir]
-  *   tools/run.sh graft.tools.Dev audit [_] [sfDir]
+  *   tools/run.sh graft.tools.Dev knnprobe _ [sfDir]
+  *   tools/run.sh graft.tools.Dev sql <SQL> [sfDir]
   *   tools/run.sh graft.tools.Dev time <name | SQL> [sfDir] [iters]
+  *   tools/run.sh graft.tools.Dev dump <name> [sfDir]
+  *   tools/run.sh graft.tools.Dev digests <_ | name,name,...> [sfDir]
+  *   tools/run.sh graft.tools.Dev lint [_] [sfDir]
+  *   tools/run.sh graft.tools.Dev audit [_] [sfDir]
   */
 object Dev {
   /** Queries whose single-partition window runs over a frame BOUNDED
@@ -141,11 +147,20 @@ object Dev {
           .parquet(s"/tmp/graft_dump/${args(1)}")
         println(s"DUMPED /tmp/graft_dump/${args(1)}")
       case "digests" =>
-        // value-level content digest per testdata table (the canary pins)
-        graft.Tables.names.foreach { n =>
-          val d = graft.ops.Profile.contentDigest(graft.Tables.t(spark, dir, n))
-          println(s"$n $d")
-        }
+        // `_`: value-level content digest per testdata table (the canary
+        // pins); a comma-separated list of query names: `name rows digest`
+        // per query, so two builds compare with one command each
+        if (args.length < 2 || args(1) == "_")
+          graft.Tables.names.foreach { n =>
+            val d = graft.ops.Profile.contentDigest(graft.Tables.t(spark, dir, n))
+            println(s"$n $d")
+          }
+        else
+          args(1).split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
+            val df = graft.SparkEntry.queries(n)(spark, dir).cache()
+            println(s"$n ${df.count()} ${graft.ops.Profile.contentDigest(df)}")
+            spark.catalog.clearCache()
+          }
       case "lint" =>
         // output-path FP-parity lint (see Lint.scala): flag any query
         // whose final output region rounds a double and casts it to
@@ -380,7 +395,7 @@ object Dev {
           spark.catalog.clearCache()
         }
       case other =>
-        System.err.println(s"unknown mode '$other' — usage: entry | explain <q> [sfDir] | show <q> [sfDir] | time <q | SQL> [sfDir] [iters] | dump <q> [sfDir] | audit [_] [sfDir]")
+        System.err.println(s"unknown mode '$other' — usage: entry | explain <q> [sfDir] | finalplan <q> [sfDir] | show <q> [sfDir] | knnprobe _ [sfDir] | sql <SQL> [sfDir] | time <q | SQL> [sfDir] [iters] | dump <q> [sfDir] | digests <_ | q,q,...> [sfDir] | lint [_] [sfDir] | audit [_] [sfDir]")
     }
     spark.stop()
   }
